@@ -23,9 +23,13 @@ Scale notes:
 - The upsert table carries one row per entity key (bounded by key
   cardinality, the reference's ``events`` table) — at cluster scale the
   same merge laws drive MERGE INTO on a transactional format.
-- The facts table is the deduped event log partitioned by micro-batch;
-  heat only ever reads the trailing 20 minutes, so ``gc(horizon)``
-  drops older batch dirs and the table stays O(window), not O(history).
+- The facts table is the deduped event log partitioned by micro-batch.
+  Heat only ever reads the trailing 20 minutes, but nothing calls
+  ``SurvivorFactsTable.gc`` today: the table gains one ``batch=N/`` dir
+  per data micro-batch and grows with history, and ``read_cards`` lists
+  and scans every dir (same cards, a longer read as dirs pile up).
+  ``gc`` runs Spark jobs for every dir it checks, so the beat cycle
+  does not call it.
 - Both sinks are idempotent per (key, batch_id) / per batch dir, so
   foreachBatch at-least-once redelivery leaves state unchanged (ST5) —
   asserted by tests/test_streaming.py.
@@ -50,8 +54,11 @@ UPSERT_KEYS = ["event_key", "event_type"]
 class SurvivorFactsTable:
     """Append-only (event_type, ts_us) fact log, one parquet dir per
     micro-batch (``batch=<id>/``). Replaying a batch overwrites its own
-    dir — idempotent under foreachBatch redelivery. ``gc`` enforces the
-    heat horizon so the log is bounded by the window, not history."""
+    dir — idempotent under foreachBatch redelivery. ``gc`` drops dirs
+    behind the heat horizon when called; the pipeline does not call it.
+    Reads declare the fixed ``SCHEMA`` rather than infer it."""
+
+    SCHEMA = "event_type string, ts_us bigint"
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -71,7 +78,7 @@ class SurvivorFactsTable:
         ]
         if not dirs:
             return None
-        return self.spark.read.parquet(*dirs)
+        return self.spark.read.schema(self.SCHEMA).parquet(*dirs)
 
     def gc(self, min_ts_us: int) -> None:
         """Drop batch dirs whose max ts_us is entirely below the heat
@@ -117,7 +124,32 @@ def start_integrated_pipeline(
 ):
     """Build + start the integrated DAG (availableNow, so a call drains
     the landing dir and terminates — restartable from the checkpoint).
-    Returns (query, upsert_table, facts_table)."""
+    Returns (query, upsert_table, facts_table).
+
+    The query runs without no-data micro-batches: a drain of one slice
+    is one micro-batch, not a data batch plus an empty one that only
+    advances the watermark (and would still write an empty facts dir
+    and rewrite the unchanged upsert snapshot). The query copies the
+    session conf when it starts, so the conf is switched off only
+    around ``start()`` and other streams keep their no-data batches.
+
+    Without the empty batch, dedup state is evicted one data batch later
+    and the late-row filter (which uses the previous batch's watermark)
+    lags one data batch behind. This is safe:
+
+    - The dedup key embeds a 10-minute event-time bucket and the
+      watermark delay is 1 hour, so every earlier row of a row's key is
+      less than 10 minutes older than it, and a row that passes the
+      late filter never meets an evicted copy of its key. Deferred
+      eviction can only keep more state, which drops more duplicates.
+    - A row the lagging filter lets through is either a duplicate whose
+      key is still in state, dropped as before, or the first row of its
+      key, which the stream now keeps as the batch law does.
+
+    Either way the survivors move toward the batch keep-first law, never
+    away from it. ``max_files_per_trigger=1`` must stay:
+    keep-first-arrival equals the batch keep-min(ts, event_id) law only
+    when each micro-batch is one slice landed in event-time order."""
     upsert = KeyedParquetTable(
         spark, os.path.join(state_dir, "upsert"), key_cols=UPSERT_KEYS
     )
@@ -138,12 +170,18 @@ def start_integrated_pipeline(
             40,
         ),
     )
-    q = (
+    writer = (
         survivors.writeStream.foreachBatch(integrated_sink(upsert, facts))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
-        .start()
     )
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    old = spark.conf.get(no_data)
+    spark.conf.set(no_data, "false")
+    try:
+        q = writer.start()
+    finally:
+        spark.conf.set(no_data, old)
     return q, upsert, facts
 
 

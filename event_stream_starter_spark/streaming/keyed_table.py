@@ -16,10 +16,12 @@ dependency-free equivalent with identical semantics.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 STATE_COLS = [
     "event_key",
@@ -117,11 +119,22 @@ def merge_states(
     return merged
 
 
+def _atomic_write(path: str, text: str) -> None:
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        fh.write(text)
+    os.replace(tmp, path)
+
+
 class KeyedParquetTable:
     """Snapshot-versioned keyed table with an atomic current-version
     pointer. Readers always see a complete snapshot; the writer renames
     the pointer last (rename is atomic on a POSIX fs; on object stores
-    this layer is replaced by the table format's commit protocol)."""
+    this layer is replaced by the table format's commit protocol).
+
+    The snapshot schema is stored once, in ``_schema.json`` next to the
+    pointer, before the pointer first names a snapshot; reads declare it
+    instead of running a parquet schema-inference job per read."""
 
     def __init__(
         self,
@@ -138,10 +151,26 @@ class KeyedParquetTable:
         # finish its scan (a one-version grace period; a real table
         # format's snapshot retention plays this role).
         self.keep_versions = max(2, keep_versions)
+        self._schema: StructType | None = None
         os.makedirs(path, exist_ok=True)
 
     def _pointer(self) -> str:
         return os.path.join(self.path, "CURRENT")
+
+    def _schema_file(self) -> str:
+        return os.path.join(self.path, "_schema.json")
+
+    def _stored_schema(self) -> StructType | None:
+        """The stored snapshot schema; None for a table written before
+        the schema was stored (its reads infer it until the next upsert
+        stores it)."""
+        if self._schema is None:
+            try:
+                with open(self._schema_file()) as fh:
+                    self._schema = StructType.fromJson(json.load(fh))
+            except FileNotFoundError:
+                return None
+        return self._schema
 
     def current_version(self) -> int | None:
         try:
@@ -154,7 +183,9 @@ class KeyedParquetTable:
         v = self.current_version()
         if v is None:
             return None
-        return self.spark.read.parquet(os.path.join(self.path, f"v{v}"))
+        schema = self._stored_schema()
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(os.path.join(self.path, f"v{v}"))
 
     def upsert_batch(self, batch: DataFrame, batch_id: int) -> None:
         incoming = aggregate_batch(batch, self.key_cols)
@@ -165,13 +196,11 @@ class KeyedParquetTable:
             merged = merge_states(current, incoming, batch_id, self.key_cols)
         v = (self.current_version() or 0) + 1
         target = os.path.join(self.path, f"v{v}")
-        merged.select(*_state_cols(self.key_cols)).write.mode("overwrite").parquet(
-            target
-        )
-        tmp = self._pointer() + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(v))
-        os.replace(tmp, self._pointer())
+        snapshot = merged.select(*_state_cols(self.key_cols))
+        snapshot.write.mode("overwrite").parquet(target)
+        if self._stored_schema() is None:
+            _atomic_write(self._schema_file(), snapshot.schema.json())
+        _atomic_write(self._pointer(), str(v))
         self._gc(v)
 
     def _gc(self, current: int) -> None:

@@ -1343,6 +1343,45 @@ def test_streaming_semdedup_crash_replay_window_is_idempotent(spark, sf_dir, tmp
     assert decisions.count() == emb.count()
 
 
+def _event_time_slices(spark, sf_dir, tmp_path, n):
+    """Stage the events as ``n`` contiguous event-time slices, each a
+    single sorted parquet file with a pinned, strictly increasing mtime
+    (FileStreamSource orders by mod time; maxFilesPerTrigger=1 → one
+    slice per batch). Returns (slice_files, arm); ``arm(k)`` places
+    slice k into ``tmp_path / "land"``."""
+    import shutil
+
+    from event_stream_starter_spark.io import load_table
+
+    ev = load_table(spark, sf_dir, "events")
+    sliced = ev.withColumn(
+        "slice", F.ntile(n).over(Window.orderBy("ts", "event_id"))
+    )
+    stage = tmp_path / "stage"
+    land = tmp_path / "land"
+    land.mkdir()
+    slice_files = []
+    for i in range(1, n + 1):
+        out = stage / f"s{i}"
+        sliced.filter(F.col("slice") == i).drop("slice").repartition(
+            1
+        ).sortWithinPartitions("ts", "event_id").write.mode("overwrite").parquet(
+            str(out)
+        )
+        parts = [p for p in out.iterdir() if p.name.endswith(".parquet")]
+        if not parts:
+            continue
+        dst = land / f"slice_{i:02d}.parquet"
+        slice_files.append((parts[0], dst, 1_700_000_000 + i * 10))
+
+    def arm(k):
+        src, dst, mt = slice_files[k]
+        shutil.copy(str(src), str(dst))
+        os.utime(str(dst), (mt, mt))
+
+    return slice_files, arm
+
+
 def test_integrated_pipeline_stream_restart_matches_batch_trace(
     spark, sf_dir, tmp_path
 ):
@@ -1360,9 +1399,6 @@ def test_integrated_pipeline_stream_restart_matches_batch_trace(
     micro-batch) so keep-first-arrival == the batch keep-min(ts,
     event_id) law — the ordered-ingest contract the reference's poller
     provides (SURVEY §3.1; worker/tasks.py:104-140)."""
-    import shutil as _sh
-
-    from event_stream_starter_spark.io import load_table
     from event_stream_starter_spark.queries import all_queries
     from event_stream_starter_spark.streaming.e2e import (
         integrated_sink,
@@ -1375,36 +1411,10 @@ def test_integrated_pipeline_stream_restart_matches_batch_trace(
         for r in all_queries()["e2e_pipeline_trace"].fn(spark, sf_dir).collect()
     )
 
-    # Landing: 6 contiguous event-time slices, each a single sorted
-    # parquet file with strictly increasing mtimes (FileStreamSource
-    # orders by mod time; maxFilesPerTrigger=1 → one slice per batch).
-    ev = load_table(spark, sf_dir, "events")
-    sliced = ev.withColumn(
-        "slice", F.ntile(6).over(Window.orderBy("ts", "event_id"))
-    )
-    stage = tmp_path / "stage"
     land = tmp_path / "land"
-    land.mkdir()
-    slice_files = []
-    for i in range(1, 7):
-        out = stage / f"s{i}"
-        sliced.filter(F.col("slice") == i).drop("slice").repartition(
-            1
-        ).sortWithinPartitions("ts", "event_id").write.mode("overwrite").parquet(
-            str(out)
-        )
-        parts = [p for p in out.iterdir() if p.name.endswith(".parquet")]
-        if not parts:
-            continue
-        dst = land / f"slice_{i:02d}.parquet"
-        slice_files.append((parts[0], dst, 1_700_000_000 + i * 10))
+    slice_files, _arm = _event_time_slices(spark, sf_dir, tmp_path, 6)
     ck = str(tmp_path / "ck_e2e")
     state = str(tmp_path / "state_e2e")
-
-    def _arm(k):  # place slice k into the landing dir with pinned mtime
-        src, dst, mt = slice_files[k]
-        _sh.copy(str(src), str(dst))
-        os.utime(str(dst), (mt, mt))
 
     # Phase 1: first half of the corpus, then the query TERMINATES
     # (availableNow) — the "kill" point, offsets committed.
@@ -1484,6 +1494,58 @@ def test_integrated_pipeline_stream_restart_matches_batch_trace(
         .otherwise("observe"),
     )
     assert relab.filter(F.col("level") != F.col("level2")).count() == 0
+
+
+def test_integrated_cycle_runs_one_microbatch_and_infers_no_schema(
+    spark, sf_dir, tmp_path
+):
+    """Job budget of one steady beat cycle (a start_integrated_pipeline
+    drain of one landed slice, then read_cards + collect): one
+    micro-batch, no no-data batch, the session's no-data conf left as
+    it was, and at most 9 Spark jobs. The state tables declare schemas
+    equal to what parquet inference reads, so reads run no inference
+    job."""
+    from event_stream_starter_spark.streaming.e2e import (
+        read_cards,
+        start_integrated_pipeline,
+    )
+
+    land = str(tmp_path / "land")
+    _, arm = _event_time_slices(spark, sf_dir, tmp_path, 2)
+    state, ck = str(tmp_path / "state"), str(tmp_path / "ck")
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(no_data)
+
+    def cycle():
+        q, upsert, facts = start_integrated_pipeline(spark, land, state, ck)
+        q.awaitTermination()
+        cards = read_cards(upsert, facts).collect()
+        return q, upsert, facts, cards
+
+    arm(0)
+    cycle()  # warm: the first cycle also creates both tables
+    arm(1)
+    sc = spark.sparkContext
+    group = "cycle-budget-test"
+    sc.setJobGroup(group, "one steady cycle")
+    try:
+        q, upsert, facts, cards = cycle()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs = [*tracker.getJobIdsForGroup(group), *tracker.getJobIdsForGroup(str(q.runId))]
+
+    assert cards
+    assert len(q.recentProgress) == 1
+    assert q.recentProgress[0]["numInputRows"] > 0
+    assert spark.conf.get(no_data) == before
+    assert len(jobs) <= 9, f"{len(jobs)} Spark jobs in one cycle"
+    snapshot = os.path.join(upsert.path, f"v{upsert.current_version()}")
+    assert upsert.read().schema == spark.read.parquet(snapshot).schema
+    fact_dirs = [str(p) for p in (tmp_path / "state" / "facts").glob("batch=*")]
+    assert len(fact_dirs) == 2
+    assert facts.read().schema == spark.read.parquet(*fact_dirs).schema
 
 
 def test_streaming_datacard_matches_batch_query_and_replay_safe(
