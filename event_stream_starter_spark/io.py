@@ -9,14 +9,24 @@ read natively: we read it via the nanosAsLong legacy conf and normalize
 to TimestampType by integer-dividing to microseconds — the same
 truncation DuckDB applies when it coerces ns→µs, so oracle comparisons
 see identical instants.
+
+A managed copy (ingest_managed) carries its Spark schema in a
+``<table>.parquet/_schema.json`` sidecar. load_table declares it
+instead of running a one-task parquet schema-inference job per load
+(Spark's file index skips ``_``-prefixed files, so the scan never sees
+it). A copy without the sidecar, e.g. one made by older code, is
+inferred once on its first load and the sidecar is written then (tmp
+file + atomic rename), so every later load takes the same path.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -119,6 +129,36 @@ def _load_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def atomic_write(path: str, text: str) -> None:
+    """Write `text` to `path` via a per-process tmp file and an atomic
+    rename, so a reader sees the old file or the whole new one."""
+    tmp = f"{path}.tmp{os.getpid()}"
+    with open(tmp, "w") as fh:
+        fh.write(text)
+    os.replace(tmp, path)
+
+
+def read_schema(path: str) -> StructType | None:
+    """The StructType stored as JSON at `path` (a ``_schema.json``
+    sidecar), or None when the file does not exist."""
+    try:
+        with open(path) as fh:
+            return StructType.fromJson(json.load(fh))
+    except FileNotFoundError:
+        return None
+
+
+def _managed_schema(spark: SparkSession, managed: str) -> StructType:
+    """The managed copy's schema from its ``_schema.json`` sidecar;
+    inferred once (one parquet footer job) and stored if missing."""
+    path = os.path.join(managed, "_schema.json")
+    schema = read_schema(path)
+    if schema is None:
+        schema = spark.read.parquet(managed).schema
+        atomic_write(path, schema.json())
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     managed = os.path.join(_managed_dir(sf_dir), f"{name}.parquet")
     if os.path.isdir(managed):
@@ -127,7 +167,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # table (embeddings, documents) can land in 1-2 files whose
         # downstream per-row work needs all cores (measured 8x on the
         # embedding self-join when read as a single split).
-        return _spread(spark, spark.read.parquet(managed), managed)
+        schema = _managed_schema(spark, managed)
+        return _spread(spark, spark.read.schema(schema).parquet(managed), managed)
     path = os.path.join(sf_dir, f"{name}.parquet")
     return _spread(spark, _load_raw(spark, sf_dir, name), path)
 

@@ -30,9 +30,10 @@ Scale posture (100TB):
 - `localCheckpoint(eager=True)` truncates lineage every iteration —
   without it the plan doubles per round and the driver OOMs on plan
   serialization long before data is the problem.
-- Convergence test is sum(label): labels only ever decrease, so the
-  (decimal, overflow-proof) sum is strictly decreasing until fixpoint.
-  One cheap aggregate per round instead of an old-vs-new anti-join.
+- Convergence test: the round's groupBy also keeps each node's previous
+  label, so the fixpoint is "no label decreased" — one count per round
+  instead of an old-vs-new anti-join, and it holds for any orderable id
+  type (a numeric checksum such as sum(label) is NULL for string ids).
 """
 
 from __future__ import annotations
@@ -41,6 +42,7 @@ import logging
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 logger = logging.getLogger(__name__)
 
@@ -211,12 +213,25 @@ def connected_components(
     # every caller) folds into the collect it preceded (guide §1 —
     # measure what each driver job costs; the big path never collects).
     head = p.limit(small_graph_limit + 1).collect()
+    node_type = p.schema["s"].dataType
     if len(head) <= small_graph_limit:
         labels = _driver_union_find([(r["s"], r["d"]) for r in head])
-        node_type = p.schema["s"].dataType.simpleString()
-        return p.sparkSession.createDataFrame(
-            list(labels.items()), f"node {node_type}, label {node_type}"
+        # Ship the labels as an Arrow table: Spark plans it as a
+        # JVM-local relation (LocalTableScan), where a list of tuples
+        # becomes a pickled Python RDD whose every execution starts
+        # Python-worker jobs.
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        arrow_type = to_arrow_type(node_type)
+        table = pa.table(
+            {
+                "node": pa.array(list(labels), arrow_type),
+                "label": pa.array(list(labels.values()), arrow_type),
+            }
         )
+        schema = StructType([StructField(c, node_type) for c in table.column_names])
+        return p.sparkSession.createDataFrame(table, schema)
     edges = (
         p.union(p.select(F.col("d").alias("s"), F.col("s").alias("d")))
         .distinct()
@@ -230,29 +245,26 @@ def connected_components(
         .select(F.col("s").alias("node"), "label")
         .localCheckpoint(eager=True)
     )
-
-    prev_sum = labels.agg(
-        F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    ).collect()[0]["s"]
+    no_own = F.lit(None).cast(node_type)
 
     for _ in range(max_iter):
-        # Neighbor labels flow along edges; keep own label via union.
+        # Neighbor labels flow along edges; keep own label via union. The
+        # own row also carries the label into `own`, so one aggregation
+        # yields both the new label and the previous one to test against.
         nbr = (
             edges.join(labels, edges["d"] == labels["node"])
-            .select(F.col("s").alias("node"), "label")
+            .select(F.col("s").alias("node"), "label", no_own.alias("own"))
         )
-        labels = (
-            labels.unionByName(nbr)
+        step = (
+            labels.withColumn("own", F.col("label"))
+            .unionByName(nbr)
             .groupBy("node")
-            .agg(F.min("label").alias("label"))
+            .agg(F.min("label").alias("label"), F.max("own").alias("own"))
             .localCheckpoint(eager=True)
         )
-        cur_sum = labels.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-        if cur_sum == prev_sum:
+        labels = step.select("node", "label")
+        if step.where(F.col("label") < F.col("own")).count() == 0:
             return labels
-        prev_sum = cur_sum
     # max_iter exhausted without a fixpoint: the graph has an adversarial
     # diameter (> max_iter). O(diameter)-round propagation is the wrong
     # algorithm there — escape to O(log² n)-round star contraction.

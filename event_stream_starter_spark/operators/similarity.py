@@ -832,10 +832,11 @@ def with_codebooks(df: DataFrame, codebooks: list[list[list[float]]]) -> DataFra
     """Attach the PQ codebooks to `df` as a broadcast ONE-ROW model
     frame (column ``cbs``) instead of a plan literal.
 
-    The literal form (pq_code_expr / pq_adc_sq_expr) embeds M x K x ds
-    doubles into the expression tree TWICE per consumer; at M=16, K=64
-    that is ~8k literal nodes whose construction + analysis measured
-    3.4-10s PER QUERY BUILD at sf0.1 — more than the query's execution.
+    A codebook-literal form (M unrolled transforms over
+    _centroid_literal) embeds M x K x ds doubles into the expression
+    tree TWICE per consumer; at M=16, K=64 that is ~8k literal nodes
+    whose construction + analysis measured 3.4-10s PER QUERY BUILD at
+    sf0.1 — more than the query's execution.
     A 1-row broadcast costs one BroadcastNestedLoopJoin row-append and
     keeps the tree constant-size (the x_bitext_mine_ann centroid-frame
     precedent: "plan compile was 2s+ with the literal"). Drop ``cbs``
@@ -850,10 +851,11 @@ def with_codebooks(df: DataFrame, codebooks: list[list[list[float]]]) -> DataFra
 
 def pq_code_col(vec: str, m: int, ds: int) -> Column:
     """array<int> of M subspace codes against the ``cbs`` column (see
-    with_codebooks) — value-identical to pq_code_expr: same sequential
-    L2 fold per codeword, same first-argmin tie-break, evaluated as one
-    constant-size nested-HOF expression instead of M unrolled
-    transforms over codebook literals."""
+    with_codebooks) — the reference tier of the PQ encoder: per
+    subspace, the sequential L2 fold per codeword and the first-argmin
+    tie-break (deterministic), evaluated as one constant-size nested-HOF
+    expression instead of M unrolled transforms over codebook
+    literals."""
     sub = f"slice({vec}, cast(i * {ds} + 1 as int), {ds})"
     dists = (
         "transform(element_at(cbs, cast(i + 1 as int)), c -> "
@@ -867,10 +869,9 @@ def pq_code_col(vec: str, m: int, ds: int) -> Column:
 
 
 def pq_adc_sq_col(qvec: str, codes: str, m: int, ds: int) -> Column:
-    """Squared ADC distance against the ``cbs`` column — value-identical
-    to pq_adc_sq_expr: the subspace partials accumulate left-to-right
-    from 0D exactly like the unrolled chained sum (an aggregate fold is
-    the same addition sequence)."""
+    """Squared ADC distance against the ``cbs`` column — the reference
+    tier of the PQ approximation of ||q - x||^2: the subspace partials
+    ||q_sub - codeword[code]||^2 accumulate left-to-right from 0D."""
     cent = (
         "element_at(element_at(cbs, cast(i + 1 as int)),"
         f" cast(element_at({codes}, cast(i + 1 as int)) + 1 as int))"
@@ -883,7 +884,7 @@ def pq_adc_sq_col(qvec: str, codes: str, m: int, ds: int) -> Column:
 
 def pq_encode_udf(codebooks: list[list[list[float]]]):
     """Arrow-batched PQ encoder: vec -> array<int> of M subspace codes,
-    BIT-EQUAL to pq_code_col / pq_code_expr (pinned by
+    BIT-EQUAL to the reference tier pq_code_col (pinned by
     tests/test_neardup_golden.py::test_pq_encode_udf_equals_hof_kernel):
 
     - per (row, codeword) the squared distance is the DIM-SEQUENTIAL
@@ -957,7 +958,7 @@ def pq_encode_udf(codebooks: list[list[list[float]]]):
 
 def pq_adc_udf(codebooks: list[list[list[float]]]):
     """Arrow-batched ADC distance: (qvec, codes) -> squared asymmetric
-    distance, BIT-EQUAL to pq_adc_sq_col / pq_adc_sq_expr (pinned by
+    distance, BIT-EQUAL to the reference tier pq_adc_sq_col (pinned by
     tests/test_neardup_golden.py::test_pq_adc_udf_equals_hof_kernel):
     the subspace partials accumulate LEFT-TO-RIGHT from 0.0 (the
     ``aggregate(sequence(0, m-1), 0D, ...)`` order) and each partial is
@@ -1026,41 +1027,8 @@ def pq_encode(
     shared build-side helper for the one-shot queries and the streaming
     index sinks. Uses the Arrow kernel tier (pq_encode_udf) —
     bit-equal to the broadcast-codebook HOF kernel by the pinned test;
-    pq_code_col/pq_code_expr remain the reference implementations."""
+    pq_code_col remains the reference implementation."""
     return df.select(*keep, pq_encode_udf(codebooks)(F.col(vec_col)).alias(out))
-
-
-def pq_code_expr(vec: Column, codebooks: list[list[list[float]]]) -> Column:
-    """array<int> of M subspace codes: per subspace, the index of the
-    L2-closest codeword (first-argmin tie-break — deterministic).
-    Map-only; the codebooks ride the plan as literals."""
-    ds = len(codebooks[0][0])
-    codes = []
-    for i, cb in enumerate(codebooks):
-        sub = F.slice(vec, i * ds + 1, ds)
-        dists = F.transform(_centroid_literal(cb), lambda c: l2_sq(sub, c))
-        codes.append(
-            (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-        )
-    return F.array(*codes)
-
-
-def pq_adc_sq_expr(
-    qvec: Column, codes: Column, codebooks: list[list[list[float]]]
-) -> Column:
-    """Squared ADC distance: sum over subspaces of ||q_sub -
-    codeword[code]||^2 — the PQ approximation of ||q - x||^2. Pure
-    column fold over the codebook literals (at real scale the per-query
-    LUT is precomputed once; the algebra here is identical)."""
-    ds = len(codebooks[0][0])
-    total = F.lit(0.0)
-    for i, cb in enumerate(codebooks):
-        cent = F.element_at(
-            _centroid_literal(cb),
-            (F.element_at(codes, i + 1) + F.lit(1)).cast("int"),
-        )
-        total = total + l2_sq(F.slice(qvec, i * ds + 1, ds), cent)
-    return total
 
 
 def _pq_rerank_emit(

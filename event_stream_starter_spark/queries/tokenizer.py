@@ -348,7 +348,11 @@ def x_bpe_encode_frozen_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_bpe.py pins encode_text_expr == encode_text_py ==
     adversarial reference), so the driver hash-checks this tier
     end-to-end too. Registered to price the tier: map-only Arrow
-    exchange, zero shuffle — the VERDICT r6 task-7 bench row.
+    exchange, zero shuffle — the VERDICT r6 task-7 bench row. The
+    kernel runs the merge scan once per distinct word of each Arrow
+    batch (bpe_encode_udf's memo), so the price is the Arrow round trip
+    plus a dict probe per word token: 270,704 sf0.1 tokens are only 31
+    distinct words.
     """
     docs = load_table(spark, sf_dir, "documents")
     clean = F.translate(F.col("text"), _SEP, "")

@@ -16,12 +16,13 @@ dependency-free equivalent with identical semantics.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from ..io import atomic_write, read_schema
 
 STATE_COLS = [
     "event_key",
@@ -119,13 +120,6 @@ def merge_states(
     return merged
 
 
-def _atomic_write(path: str, text: str) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(text)
-    os.replace(tmp, path)
-
-
 class KeyedParquetTable:
     """Snapshot-versioned keyed table with an atomic current-version
     pointer. Readers always see a complete snapshot; the writer renames
@@ -165,11 +159,7 @@ class KeyedParquetTable:
         the schema was stored (its reads infer it until the next upsert
         stores it)."""
         if self._schema is None:
-            try:
-                with open(self._schema_file()) as fh:
-                    self._schema = StructType.fromJson(json.load(fh))
-            except FileNotFoundError:
-                return None
+            self._schema = read_schema(self._schema_file())
         return self._schema
 
     def current_version(self) -> int | None:
@@ -199,8 +189,8 @@ class KeyedParquetTable:
         snapshot = merged.select(*_state_cols(self.key_cols))
         snapshot.write.mode("overwrite").parquet(target)
         if self._stored_schema() is None:
-            _atomic_write(self._schema_file(), snapshot.schema.json())
-        _atomic_write(self._pointer(), str(v))
+            atomic_write(self._schema_file(), snapshot.schema.json())
+        atomic_write(self._pointer(), str(v))
         self._gc(v)
 
     def _gc(self, current: int) -> None:

@@ -120,15 +120,42 @@ def test_encode_expr_and_udf_match_python_per_doc(spark, sf_dir):
         assert r["u"] == want, r["doc_id"]
 
 
-@pytest.mark.parametrize(
-    "text",
-    ["", "   ", "a", "aaaa", "héllo", "x " * 50, "ab ab ab abab"],
-)
-def test_encode_edge_cases_expr_matches_python(spark, text):
-    merges = [("a", "a"), ("aa", "aa"), ("a", "b</w>"), ("h", "é")]
-    df = spark.createDataFrame([(text,)], ["text"])
-    got = df.select(bpe.encode_text_expr(F.col("text"), merges).alias("p")).first()["p"]
-    assert got == bpe.encode_text_py(text, merges)
+_EDGE_MERGES = [("a", "a"), ("aa", "aa"), ("a", "b</w>"), ("h", "é")]
+_EDGE_TEXTS = [
+    "",
+    "   ",
+    "a",
+    "aaaa",
+    "héllo",
+    "x " * 50,
+    "ab ab ab abab",
+    "Ab ab AB ab",  # one word, three casings: memo hits after lower()
+    "ha\xa0ab ab",  # \xa0 is not a split char: 'ha\xa0ab' is one word
+    "quick brown fox jumps",  # every word distinct: memo misses only
+    None,
+]
+
+
+@pytest.fixture(scope="module")
+def edge_encodings(spark):
+    """Both encoder tiers over every edge text, as ONE DataFrame in one
+    partition, so the UDF's per-batch word memo sees words repeat
+    across rows of a single Arrow batch."""
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(_EDGE_TEXTS)], "i int, text string"
+    ).coalesce(1)
+    rows = df.select(
+        "i",
+        bpe.encode_text_expr(F.col("text"), _EDGE_MERGES).alias("e"),
+        bpe.bpe_encode_udf(_EDGE_MERGES)(F.col("text")).alias("u"),
+    ).collect()
+    return {_EDGE_TEXTS[r["i"]]: (r["e"], r["u"]) for r in rows}
+
+
+@pytest.mark.parametrize("text", _EDGE_TEXTS)
+def test_encode_edge_cases_expr_matches_python(edge_encodings, text):
+    want = None if text is None else bpe.encode_text_py(text, _EDGE_MERGES)
+    assert edge_encodings[text] == (want, want)
 
 
 def test_merged_symbol_never_remerges_as_left_within_round(spark):

@@ -257,17 +257,21 @@ def test_connected_components_random_graphs_match_union_find(
     spark, small_graph_limit
 ):
     """Seeded random graphs (varied density, incl. isolated-pair-free
-    long chains) vs a pure-Python union-find — BOTH strategy paths:
-    the default (driver union-find under the size gate) and, with
-    small_graph_limit=0, the distributed label-propagation loop, so a
-    regression in either cannot hide behind the other."""
+    long chains), an empty pair set and string node ids vs a
+    pure-Python union-find — BOTH strategy paths: the default (driver
+    union-find under the size gate) and, with small_graph_limit=0, the
+    distributed label-propagation loop, so a regression in either
+    cannot hide behind the other. The driver path's labels must be a
+    JVM-local relation, not a pickled Python RDD."""
     import random
 
     from event_stream_starter_spark.operators.graph import connected_components
+    from tests.oracle_utils import union_find_clusters
 
     kwargs = {} if small_graph_limit is None else {
         "small_graph_limit": small_graph_limit
     }
+    cases = []
     for seed, n_nodes, n_edges in [(1, 30, 10), (2, 40, 60), (3, 25, 24)]:
         rng = random.Random(seed)
         edges = list(
@@ -276,16 +280,23 @@ def test_connected_components_random_graphs_match_union_find(
                 for _ in range(n_edges)
             }
         )
-        pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
-        got = {
-            (r["node"], r["label"])
-            for r in connected_components(pairs, **kwargs).collect()
-        }
-
-        from tests.oracle_utils import union_find_clusters
-
+        cases.append((f"seed={seed}", edges, "bigint"))
+    cases.append(("empty", [], "bigint"))
+    # String ids order lexicographically ('doc-10' < 'doc-9'): the
+    # label is the min id by string order on both sides.
+    cases.append(
+        ("strings", [(f"doc-{a}", f"doc-{b}") for a, b in cases[0][1]], "string")
+    )
+    for name, edges, id_type in cases:
+        pairs = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
+        cc = connected_components(pairs, **kwargs)
+        assert cc.dtypes == [("node", id_type), ("label", id_type)], name
+        got = {(r["node"], r["label"]) for r in cc.collect()}
         expected = set(union_find_clusters(edges).items())
-        assert got == expected, f"seed={seed}"
+        assert got == expected, name
+        if small_graph_limit is None:
+            plan = cc._jdf.queryExecution().executedPlan().toString()
+            assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
 
 def test_minhash_vectorized_signature_bit_equals_sql(spark, sf_dir):

@@ -4,6 +4,8 @@ products — and the §4 governors (cost guard, shape lint) must fire."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -29,6 +31,35 @@ def test_star_join_broadcasts_dims_and_prunes_columns(spark, sf_dir):
     # lineitem scan reads only the 3 needed columns of 7.
     li = [c for c in f.scan_columns if "l_extendedprice" in c]
     assert li and li[0] == {"l_orderkey", "l_extendedprice", "l_discount"}
+
+
+def test_managed_load_declares_stored_schema_and_runs_no_job(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A managed copy's load declares the schema stored in its
+    _schema.json sidecar: equal to parquet inference for every table,
+    invisible to the scan, and a load that finds it runs no Spark job."""
+    from event_stream_starter_spark import io as eio
+    from event_stream_starter_spark.schemas import TESTDATA_TABLES
+
+    monkeypatch.setattr(eio, "_MANAGED_ROOT", str(tmp_path))
+    root = eio.ingest_managed(spark, sf_dir)
+    for t in TESTDATA_TABLES:
+        managed = os.path.join(root, f"{t}.parquet")
+        inferred = spark.read.parquet(managed).schema
+        assert load_table(spark, sf_dir, t).schema == inferred, t
+        assert os.path.isfile(os.path.join(managed, "_schema.json")), t
+    sc = spark.sparkContext
+    group = "managed-load-test"
+    sc.setJobGroup(group, "second load")
+    try:
+        docs = load_table(spark, sf_dir, "documents")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    managed_docs = spark.read.parquet(os.path.join(root, "documents.parquet"))
+    assert docs.count() == managed_docs.count() > 0
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
