@@ -41,6 +41,8 @@ import math
 import os
 import tempfile
 
+from ..io import atomic_write
+
 _MODELS_DIR = os.path.join(os.path.dirname(os.path.dirname(__file__)), "models")
 _CACHE_DIR = os.environ.get(
     "ESS_MODEL_CACHE",
@@ -110,16 +112,13 @@ def load_model(kind: str, fp: str) -> dict | None:
 
 
 def persist_model(kind: str, fp: str, model: dict, committed: bool = False) -> str:
-    """Atomic write (tmp + rename — the _PointerSink commit shape) to
+    """Atomic write (io.atomic_write: per-process tmp + rename) to
     the writable cache, or to the committed models dir when the
     generator script is freezing a repo artifact."""
     model = dict(model, fingerprint=fp)
     target = _paths(kind, fp)[0 if committed else 1]
     os.makedirs(os.path.dirname(target), exist_ok=True)
-    tmp = target + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(model, fh)
-    os.replace(tmp, target)
+    atomic_write(target, json.dumps(model))
     _MEM[(kind, fp)] = model
     return target
 

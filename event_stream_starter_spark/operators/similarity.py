@@ -10,8 +10,11 @@ JVM-side, no Python boundary.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from . import arrow_batch as ab
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -885,7 +888,8 @@ def pq_adc_sq_col(qvec: str, codes: str, m: int, ds: int) -> Column:
 def pq_encode_udf(codebooks: list[list[list[float]]]):
     """Arrow-batched PQ encoder: vec -> array<int> of M subspace codes,
     BIT-EQUAL to the reference tier pq_code_col (pinned by
-    tests/test_neardup_golden.py::test_pq_encode_udf_equals_hof_kernel):
+    tests/test_neardup_golden.py::test_pq_encode_udf_equals_hof_kernel
+    and the plants of tests/test_kernel_plants.py):
 
     - per (row, codeword) the squared distance is the DIM-SEQUENTIAL
       fold acc_{d+1} = acc_d + (x_d - c_d)^2 — the exact association of
@@ -893,15 +897,15 @@ def pq_encode_udf(codebooks: list[list[list[float]]]):
       (float32 inputs widen to double exactly, as zip_with promotes);
     - the code is the FIRST argmin (np.argmin == array_position of
       array_min — both first-match);
-    - a NULL vector yields an array of M NULL codes — exactly the HOF
-      form's propagation (transform over sequence(0, m-1) of NULL
-      array_position results, not a NULL array);
-    - a vector with null ELEMENTS (Arrow hands them over as NaN holes
-      in the float array) yields a NULL code for exactly the subspaces
-      whose dims contain a hole and valid codes elsewhere — the HOF's
-      per-subspace propagation (the hole NULLs every codeword distance
-      of its own subspace only, so array_position(NULL) is NULL there
-      and the other subspaces fold normally).
+    - NULL law: a subspace with a hole — a NULL vector, a NULL element,
+      or dims past the end of a short vector — gets a NULL code (the
+      hole NULLs every codeword distance of that subspace, so
+      array_position(NULL) is NULL) and the other subspaces keep
+      theirs; a NULL vector yields M NULL codes, not a NULL array.
+      Dims past M*ds of a long vector are never read (``slice``);
+    - NaN law: a NaN element makes every distance of its subspace NaN;
+      array_min of an all-NaN array is NaN and array_position finds it
+      at 1, so the code is 0 — np.argmin's first NaN.
 
     Why it exists: the nested-HOF kernel is interpreted per element —
     M x K x ds lambda evaluations per row (~8M per 2k-row corpus at
@@ -909,49 +913,22 @@ def pq_encode_udf(codebooks: list[list[list[float]]]):
     M x ds fused numpy ops per batch (guide §4.2), ~20x less wall.
     """
     import numpy as np
-    import pandas as pd
 
     cb = np.asarray(codebooks, dtype=np.float64)  # (m, k, ds)
     m, k, ds = cb.shape
 
-    @F.pandas_udf("array<int>")
-    def _enc(batch):  # type: ignore[no-untyped-def]
-        vals = list(batch)
-        conv = [
-            None if v is None else np.asarray(v, dtype=np.float64)
-            for v in vals
-        ]
-        mask = [v is not None for v in conv]
-        live = [v for v in conv if v is not None]
-        out: list = [[None] * m for _ in vals]
-        if live:
-            vs = np.stack(live)  # (n, m*ds)
-            # Null elements arrive as NaN holes: a hole NULLs exactly
-            # its own subspace's code in the HOF form (all that
-            # subspace's distances fold to NULL), other subspaces stay
-            # valid. argmin over a NaN-bearing row is garbage there;
-            # the holed entries are overwritten with None below.
-            holes = np.isnan(vs).reshape(vs.shape[0], m, ds).any(axis=2)
-            codes = np.empty((vs.shape[0], m), dtype=np.int32)
-            for i in range(m):
-                sub = vs[:, i * ds : (i + 1) * ds]
-                acc = np.zeros((vs.shape[0], k), dtype=np.float64)
-                for d in range(ds):
-                    diff = sub[:, d : d + 1] - cb[i, None, :, d]
-                    acc += diff * diff
-                codes[:, i] = np.argmin(acc, axis=1)
-            j = 0
-            for idx, ok in enumerate(mask):
-                if ok:
-                    if holes[j].any():
-                        out[idx] = [
-                            None if holes[j][i] else int(codes[j, i])
-                            for i in range(m)
-                        ]
-                    else:
-                        out[idx] = codes[j].tolist()
-                    j += 1
-        return pd.Series(out, dtype=object)
+    @F.arrow_udf("array<int>")
+    def _enc(vec):  # type: ignore[no-untyped-def]
+        X, holes, _ = ab.dense_rows(vec, m * ds)
+        codes = np.empty((len(X), m), dtype=np.int32)
+        for i in range(m):
+            sub = X[:, i * ds : (i + 1) * ds]
+            acc = np.zeros((len(X), k), dtype=np.float64)
+            for d in range(ds):
+                diff = sub[:, d : d + 1] - cb[i, None, :, d]
+                acc += diff * diff
+            codes[:, i] = np.argmin(acc, axis=1)
+        return ab.list_array(codes, holes.reshape(len(X), m, ds).any(axis=2))
 
     return _enc
 
@@ -959,59 +936,46 @@ def pq_encode_udf(codebooks: list[list[list[float]]]):
 def pq_adc_udf(codebooks: list[list[list[float]]]):
     """Arrow-batched ADC distance: (qvec, codes) -> squared asymmetric
     distance, BIT-EQUAL to the reference tier pq_adc_sq_col (pinned by
-    tests/test_neardup_golden.py::test_pq_adc_udf_equals_hof_kernel):
-    the subspace partials accumulate LEFT-TO-RIGHT from 0.0 (the
+    tests/test_neardup_golden.py::test_pq_adc_udf_equals_hof_kernel
+    and the plants of tests/test_kernel_plants.py): the subspace
+    partials accumulate LEFT-TO-RIGHT from 0.0 (the
     ``aggregate(sequence(0, m-1), 0D, ...)`` order) and each partial is
-    the dim-sequential L2 fold of pq_encode_udf's law. NULL qvec or
-    codes yields NULL. Replaces the per-PAIR interpreted traversal of
-    the nested codebook array (the measured hot spot of the ADC scan).
+    the dim-sequential L2 fold of pq_encode_udf's law.
+
+    - NULL law: the distance is NULL when qvec has a hole in its first
+      M*ds dims (NULL, a NULL element, or too short) or codes has one
+      in its first M (NULL, a NULL code, or too short) — one NULL
+      partial NULLs the fold. A code >= K reads a NULL codeword
+      (ANSI-off ``element_at``) and NULLs the fold too; so does a
+      negative code here, which no encoder emits (the reference rejects
+      -1 and reads others from the end). Dims and codes past those
+      lengths are never read;
+    - NaN law: a NaN element of qvec makes the distance NaN.
+
+    Replaces the per-PAIR interpreted traversal of the nested codebook
+    array (the measured hot spot of the ADC scan).
     """
     import numpy as np
-    import pandas as pd
 
     cb = np.asarray(codebooks, dtype=np.float64)  # (m, k, ds)
     m, k, ds = cb.shape
 
-    @F.pandas_udf("double")
+    @F.arrow_udf("double")
     def _adc(qv, cd):  # type: ignore[no-untyped-def]
-        vals_q = list(qv)
-        vals_c = list(cd)
-
-        def _conv(v, as_int):  # None, or null elements inside -> NULL adc
-            if v is None:
-                return None
-            try:
-                a = np.asarray(v, dtype=np.float64)
-            except (TypeError, ValueError):
-                return None
-            # Arrow hands a null-bearing list over as floats with NaN
-            # holes — the HOF yields NULL for either argument: a holed
-            # qvec NULLs its subspace's partial and the aggregate fold
-            # absorbs it (NULL + x = NULL), same as holed codes.
-            if np.isnan(a).any():
-                return None
-            return a.astype(np.int64) if as_int else a
-
-        conv_q = [_conv(v, False) for v in vals_q]
-        conv_c = [_conv(v, True) for v in vals_c]
-        mask = [q is not None and c is not None for q, c in zip(conv_q, conv_c)]
-        out: list = [None] * len(vals_q)
-        live_idx = [i for i, ok in enumerate(mask) if ok]
-        if live_idx:
-            qs = np.stack([conv_q[i] for i in live_idx])  # (n, m*ds)
-            cs = np.stack([conv_c[i] for i in live_idx])  # (n, m)
-            total = np.zeros(qs.shape[0], dtype=np.float64)
-            for i in range(m):
-                cw = cb[i][cs[:, i]]  # (n, ds)
-                sub = qs[:, i * ds : (i + 1) * ds]
-                part = np.zeros(qs.shape[0], dtype=np.float64)
-                for d in range(ds):
-                    diff = sub[:, d] - cw[:, d]
-                    part += diff * diff
-                total += part
-            for j, i in enumerate(live_idx):
-                out[i] = float(total[j])
-        return pd.Series(out, dtype="float64")
+        Q, qholes, _ = ab.dense_rows(qv, m * ds)
+        C, choles, _ = ab.dense_rows(cd, m)
+        null = qholes.any(axis=1) | choles.any(axis=1)
+        null |= ((C < 0) | (C >= k)).any(axis=1)
+        C = np.where(null[:, None], 0, C).astype(np.int64)
+        total = np.zeros(len(Q), dtype=np.float64)
+        for i in range(m):
+            cw = cb[i][C[:, i]]  # (n, ds)
+            part = np.zeros(len(Q), dtype=np.float64)
+            for d in range(ds):
+                diff = Q[:, i * ds + d] - cw[:, d]
+                part += diff * diff
+            total += part
+        return pa.array(total, mask=null)
 
     return _adc
 
@@ -1344,29 +1308,32 @@ def rotate_udf(rotation: list[list[float]]):
     order, exactly the fold's association, and float32 inputs widen to
     float64 before the multiply exactly like the fold's cast — so every
     double is bit-equal to the Column form (pinned over the full corpus
-    by tests/test_neardup_golden.py::test_rotate_udf_equals_column_fold).
+    by tests/test_neardup_golden.py::test_rotate_udf_equals_column_fold,
+    and on the plants of tests/test_kernel_plants.py).
+
+    - NULL law: every output dim pairs the whole vector with a rotation
+      row (``zip_with`` pads the shorter side with NULLs), so a NULL
+      vector, a NULL element, or a vector whose length is not the
+      rotation's width yields an array of NULLs, not a NULL array;
+    - NaN law: a NaN element makes every output dim NaN.
+
     The brief's contract for dense linear algebra: built-ins where they
     win, Arrow-batched numpy where the interpreter is the bottleneck.
     """
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
-    rows = [[float(x) for x in r] for r in rotation]
+    rm = np.array(rotation, dtype=np.float64)
 
-    @pandas_udf("array<double>")
-    def _rot(s):  # type: ignore[no-untyped-def]
-        rm = np.array(rows, dtype=np.float64)
-        if len(s) == 0:
-            return pd.Series([], dtype=object)
-        x = np.vstack([np.asarray(v, dtype=np.float64) for v in s])
-        out = np.empty((x.shape[0], rm.shape[0]))
+    @F.arrow_udf("array<double>")
+    def _rot(vec):  # type: ignore[no-untyped-def]
+        x, holes, ragged = ab.dense_rows(vec, rm.shape[1])
+        out = np.empty((len(x), rm.shape[0]))
         for j in range(rm.shape[0]):
-            acc = np.zeros(x.shape[0])
+            acc = np.zeros(len(x))
             for k in range(rm.shape[1]):
                 # same left-fold order as the Column dot: ((0 + t0) + t1)...
                 acc = acc + rm[j, k] * x[:, k]
             out[:, j] = acc
-        return pd.Series(list(out))
+        return ab.list_array(out, (holes.any(axis=1) | ragged)[:, None])
 
     return _rot

@@ -54,18 +54,6 @@ from .textdata import _CCNET_CTES_SQL
 
 _D = "CAST(0.75 AS DOUBLE)"  # fixed KN discount
 
-# Score per gram TYPE (distinct (lang, g) term table broadcast onto the
-# occurrence stream) vs per OCCURRENCE (model probes + interpolation
-# arithmetic on every gram row). Value-identical either way; which is
-# faster depends on the types-pass cost vs the per-row arithmetic.
-# A/B'd at sf0.1 AND sf1 (OPTIMIZATION_r11.md): the type tier lost
-# 25-35% at sf0.1 everywhere (the extra distinct pass over the gram
-# stream outweighs the saved per-row arithmetic) and was mixed at sf1
-# (fused twin scorer ~10% faster, CCNet-only 45% slower), so the
-# committed default stays the per-occurrence form; the type tier is
-# kept selectable for cluster-scale re-measurement.
-_KN_TYPE_TERMS = False
-
 # Unigram (continuation) level: add-one floor keeps p > 0 for unseen
 # final chars. All inputs are BIGINT counts cast to double — identical
 # in both engines.
@@ -218,27 +206,6 @@ def _kn_score_with_model(
     the per-doc rollup. Shared verbatim by the batch queries and the
     StreamingKnScorer sink."""
     ex = _kn_grams(docs)
-    if _KN_TYPE_TERMS:
-        # Score per gram TYPE, not per occurrence: the per-gram term
-        # round(-ln(P_KN), 7) is a pure function of (lang, g), so the
-        # model probes, interpolation arithmetic and ln/round run once
-        # per distinct (lang, g) — charset³-bounded — and the
-        # occurrence stream pays ONE broadcast probe + a decimal add
-        # per gram (guide §2.3/§4.1). Identical term multiset per doc
-        # -> bit-equal decimal sum (oracle hash-proved).
-        terms = _kn_type_terms(ex, model).select(
-            "lang",
-            "g",
-            F.round(-F.log("p"), 7).cast("decimal(28,9)").alias("t"),
-        )
-        return (
-            ex.join(F.broadcast(terms), ["lang", "g"])
-            .groupBy("doc_id", "lang")
-            .agg(
-                F.count("*").alias("n_grams"),
-                F.sum("t").cast("double").alias("s"),
-            )
-        )
     exk = ex.select(
         "doc_id",
         "lang",
@@ -265,31 +232,6 @@ def _kn_score_with_model(
             .cast("double")
             .alias("s"),
         )
-    )
-
-
-def _kn_type_terms(ex: DataFrame, model: dict[str, DataFrame]) -> DataFrame:
-    """(lang, g, p): the KN probability per distinct gram TYPE of the
-    stream `ex`, from the broadcast model tables. Every (lang, g) of
-    `ex` appears (inner-join-safe downstream) because the type set is
-    derived from the same stream."""
-    types = ex.select("lang", "g").distinct()
-    tk = types.select(
-        "lang",
-        "g",
-        F.substring("g", 1, 2).alias("ab"),
-        F.substring("g", 2, 2).alias("bc"),
-        F.substring("g", 2, 1).alias("b"),
-        F.substring("g", 3, 1).alias("c3"),
-    )
-    return (
-        tk.join(F.broadcast(model["tri"]), ["lang", "g"], "left")
-        .join(F.broadcast(model["ctx2"]), ["lang", "ab"], "left")
-        .join(F.broadcast(model["cont"]), ["lang", "bc"], "left")
-        .join(F.broadcast(model["ctxc"]), ["lang", "b"], "left")
-        .join(F.broadcast(model["uni"]), ["lang", "c3"], "left")
-        .join(F.broadcast(model["tot"]), ["lang"], "left")
-        .withColumn("p", F.expr(_P_KN))
     )
 
 
@@ -323,33 +265,6 @@ def _kn_cc_scored(docs: DataFrame) -> DataFrame:
     cctot = cctot.select(
         "lang", F.col("n").alias("ccn"), F.col("v").alias("ccv")
     )
-    if _KN_TYPE_TERMS:
-        # Both scorers' per-gram terms computed once per distinct
-        # (lang, g) — see _kn_score_with_model's per-TYPE rationale;
-        # the occurrence stream pays one broadcast probe and two
-        # decimal adds per gram.
-        terms = (
-            _kn_type_terms(ex, m)
-            .join(F.broadcast(ccmodel), ["lang", "g"], "left")
-            .join(F.broadcast(cctot), ["lang"], "left")
-            .select(
-                "lang",
-                "g",
-                F.round(-F.log("p"), 7).cast("decimal(28,9)").alias("knt"),
-                F.round(-F.log(_ccnet_p_eff("ccp", "ccn", "ccv")), 7)
-                .cast("decimal(28,9)")
-                .alias("cct"),
-            )
-        )
-        return (
-            ex.join(F.broadcast(terms), ["lang", "g"])
-            .groupBy("doc_id", "lang")
-            .agg(
-                F.count("*").alias("n_grams"),
-                F.sum("knt").cast("double").alias("kn_s"),
-                F.sum("cct").cast("double").alias("cc_s"),
-            )
-        )
     exk = ex.select(
         "doc_id",
         "lang",

@@ -6,10 +6,12 @@ fingerprinting (SURVEY.md §2.2, §2.4 + the 100TB training-pipeline ops).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..operators import arrow_batch as ab
 from ..operators import certs, textan
 from ..operators.dedup import (
     containment_prefix_join,
@@ -1311,139 +1313,85 @@ _SEM_COS_SQL = (
 _SEM_PAIR_KERNEL = True
 
 
-def _sem_pair_stats_udf(ev_rows, thresh: float):
-    """pandas UDF (vec, nrm) -> struct<mc double, hits bigint>:
-    max cosine to any eval row and the >= thresh count, BIT-EQUAL to
-    the crossJoin(broadcast(ev)) + groupBy(max, sum) form (pinned by
-    tests/test_ops_golden.py::test_sem_pair_kernel_equals_hof_tier):
+def _sem_eval_side(ev: DataFrame):
+    """Collect the bounded eval side (evec, enrm[, eid]) ONCE and
+    broadcast it as numpy: ``(E, en, ok, eid)`` with E the
+    (|ev|, _SEMDECON_D) vector matrix, ``ok`` the eval rows whose dot is
+    defined (no hole, _SEMDECON_D wide, non-NULL enrm) and ``eid`` the
+    eid Arrow column or None. None when the eval side is empty: the JVM
+    form's crossJoin then emits no rows, and since that is build-time
+    knowledge no filter ever touches the UDF output (a filter on a
+    Python-UDF column is the guide §4.4 duplication/pushdown trap).
 
-    - the dot is the dim-sequential left fold acc += vec[d] * evec[d]
-      — the exact association of ``aggregate(zip_with(...), 0D, s+x)``;
-    - the cosine divides by the PRODUCT (nrm * enrm), both norms
-      computed JVM-side with _SEM_NORM_SQL (identical by construction);
-    - Spark's ANSI-off division law replicated: x / 0.0 is NULL, so a
-      zero-norm vector's cosines are NULL — they drop out of the max
-      (NULL-skipping) and never count as hits; a row whose every
-      cosine is NULL keeps its output row with mc = NULL (the JVM
-      groupBy emits the group);
-    - Spark NaN law kept for completeness: a NaN cosine would compare
-      GREATER than any double (hit + max winner) — numpy's >= is false
-      on NaN, hence the isnan() OR;
-    - an EMPTY eval side yields NULL structs (callers drop them — the
-      JVM groupBy over an empty pair frame emits no rows).
+    A Spark broadcast ships once per executor, not once per task
+    closure (at a few thousand eval docs x 64 doubles the closure form
+    re-serializes MBs per task)."""
+    t = ev.toArrow()
+    if t.num_rows == 0:
+        return None
+    E, holes, ragged = ab.dense_rows(t["evec"].combine_chunks(), _SEMDECON_D)
+    en, enull = ab.dense_col(t["enrm"].combine_chunks())
+    ok = ~(holes.any(axis=1) | ragged | enull)
+    eid = t["eid"].combine_chunks() if "eid" in t.column_names else None
+    return ev.sparkSession.sparkContext.broadcast((E, en, ok, eid))
 
-    `ev_rows` is a Spark broadcast (ships once per executor, not once
-    per task closure — at a few thousand eval docs x 64 doubles the
-    closure form re-serializes MBs per task); the numpy matrices build
-    lazily once per worker (guide §4.5).
+
+def _sem_none(df: DataFrame, *lead: Column) -> DataFrame:
+    """The kernel tier's zero-row result against an empty eval side."""
+    return df.filter(F.lit(False)).select(
+        *lead,
+        F.lit(None).cast("double").alias("mc"),
+        F.lit(None).cast("bigint").alias("hits"),
+    )
+
+
+def _sem_pair_stats_udf(bc, thresh: float):
+    """Arrow UDF (vec, nrm) -> struct<mc double, hits bigint>: max
+    cosine to any eval row and the >= thresh count, BIT-EQUAL to the
+    crossJoin(broadcast(ev)) + groupBy(max, sum) form (pinned by
+    tests/test_ops_golden.py::test_sem_pair_kernel_equals_hof_tier and
+    the plants of tests/test_kernel_plants.py). The cosine laws (dot
+    fold order, product-of-norms divisor, x / 0.0 NULL, NaN as a hit
+    and the max) are ab.cos_stats'; ``nrm`` is computed JVM-side with
+    _SEM_NORM_SQL.
+
+    - NULL law: ``zip_with(vec, evec)`` pads the shorter side with
+      NULLs, so a NULL vec or nrm, a NULL element, or a vec that is not
+      _SEMDECON_D wide has only NULL cosines: mc NULL, 0 hits;
+    - NaN law: a NaN element makes every cosine NaN: mc NaN, every
+      eval row a hit.
     """
-    import pandas as pd
 
-    state: dict = {}
-
-    def _mats():
-        import numpy as np
-
-        if "E" not in state:
-            rows = ev_rows.value
-            state["E"] = np.array(
-                [list(r[0]) for r in rows], dtype=np.float64
-            )
-            state["en"] = np.array([r[1] for r in rows], dtype=np.float64)
-        return state["E"], state["en"]
-
-    @F.pandas_udf("struct<mc: double, hits: bigint>")
+    @F.arrow_udf("struct<mc: double, hits: bigint>")
     def _stats(vec, nrm):  # type: ignore[no-untyped-def]
-        import numpy as np
-
-        n = len(vec)
-        if n == 0:
-            return pd.DataFrame({"mc": [None] * n, "hits": [None] * n})
-        E, en = _mats()
-        V = np.stack([np.asarray(v, dtype=np.float64) for v in vec])
-        dots = np.zeros((n, E.shape[0]), dtype=np.float64)
-        for d in range(V.shape[1]):
-            dots += V[:, d : d + 1] * E[None, :, d]
-        den = np.asarray(nrm, dtype=np.float64)[:, None] * en[None, :]
-        valid = den != 0.0
-        with np.errstate(divide="ignore", invalid="ignore"):
-            c = dots / den
-        hits = (
-            (((c >= thresh) | np.isnan(c)) & valid)
-            .sum(axis=1)
-            .astype(np.int64)
-        )
-        any_valid = valid.any(axis=1)
-        mcs = np.max(np.where(valid, c, -np.inf), axis=1)
-        mc = [
-            float(mcs[i]) if any_valid[i] else None for i in range(n)
-        ]
-        return pd.DataFrame({"mc": mc, "hits": hits})
+        E, en, eok, _ = bc.value
+        V, holes, ragged = ab.dense_rows(vec, _SEMDECON_D)
+        nv, nnull = ab.dense_col(nrm)
+        ok = ~(holes.any(axis=1) | ragged | nnull)[:, None] & eok[None, :]
+        mc, hits = ab.cos_stats(V, nv, E, en, thresh, ok, axis=1)
+        return pa.StructArray.from_arrays([mc, hits], names=["mc", "hits"])
 
     return _stats
 
 
-def _sem_dims_stats_udf(ev_rows, thresh: float, dd: int):
-    """pandas UDF dims -> struct<mc double, hits bigint> — the
-    unweighted screens' kernel tier: featurization (np.bincount of the
-    hashed token dims — exact integer counts, identical to the JVM's
-    64 size(filter(...)) passes) AND the pair stats in one boundary
-    crossing. The norm is the same dim-sequential v*v fold as
-    _SEM_NORM_SQL; everything else follows _sem_pair_stats_udf's laws
-    (dot fold order, NaN-as-greatest, product-of-norms divisor);
-    `ev_rows` is a Spark broadcast with per-worker lazy matrix init
-    (guide §4.5)."""
-    import pandas as pd
+def _sem_dims_stats_udf(bc, thresh: float):
+    """Arrow UDF dims -> struct<mc double, hits bigint> — the
+    unweighted screens' kernel tier: featurization AND the pair stats
+    in one boundary crossing (ab.count_rows, the _SEM_NORM_SQL fold
+    ab.l2_rows, then ab.cos_stats).
+    NULL elements and values outside [0, _SEMDECON_D) are not counted;
+    a NULL dims row counts -1 in every dim, as ANSI-off ``size(NULL)``
+    does in the JVM form, so its cosines are those of the all -1
+    vector; an empty row is the zero vector, whose cosines are NULL."""
 
-    state: dict = {}
-
-    def _mats():
-        import numpy as np
-
-        if "E" not in state:
-            rows = ev_rows.value
-            state["E"] = np.array(
-                [list(r[0]) for r in rows], dtype=np.float64
-            )
-            state["en"] = np.array([r[1] for r in rows], dtype=np.float64)
-        return state["E"], state["en"]
-
-    @F.pandas_udf("struct<mc: double, hits: bigint>")
+    @F.arrow_udf("struct<mc: double, hits: bigint>")
     def _stats(dims):  # type: ignore[no-untyped-def]
-        import numpy as np
-
-        n = len(dims)
-        if n == 0:
-            return pd.DataFrame({"mc": [], "hits": []})
-        E, en = _mats()
-        V = np.zeros((n, dd), dtype=np.float64)
-        for i, d in enumerate(dims):
-            if d is not None and len(d):
-                V[i] = np.bincount(
-                    np.asarray(d, dtype=np.int64), minlength=dd
-                )
-        nrm = np.zeros(n, dtype=np.float64)
-        for d in range(dd):
-            nrm += V[:, d] * V[:, d]
-        nrm = np.sqrt(nrm)
-        dots = np.zeros((n, E.shape[0]), dtype=np.float64)
-        for d in range(dd):
-            dots += V[:, d : d + 1] * E[None, :, d]
-        den = nrm[:, None] * en[None, :]
-        valid = den != 0.0  # Spark ANSI-off: x / 0.0 is NULL
-        with np.errstate(divide="ignore", invalid="ignore"):
-            c = dots / den
-        hits = (
-            (((c >= thresh) | np.isnan(c)) & valid)
-            .sum(axis=1)
-            .astype(np.int64)
+        E, en, eok, _ = bc.value
+        V = ab.count_rows(dims, _SEMDECON_D)
+        mc, hits = ab.cos_stats(
+            V, ab.l2_rows(V), E, en, thresh, eok[None, :], axis=1
         )
-        any_valid = valid.any(axis=1)
-        mcs = np.max(np.where(valid, c, -np.inf), axis=1)
-        mc = [
-            float(mcs[i]) if any_valid[i] else None for i in range(n)
-        ]
-        return pd.DataFrame({"mc": mc, "hits": hits})
+        return pa.StructArray.from_arrays([mc, hits], names=["mc", "hits"])
 
     return _stats
 
@@ -1456,21 +1404,12 @@ def _sem_dims_stats(hd_tr: DataFrame, ev: DataFrame, thresh: float) -> DataFrame
     size(filter(...)) expression and goes through _sem_pair_stats."""
     keys = [c for c in hd_tr.columns if c != "dims"]
     if _SEM_PAIR_KERNEL:
-        ev_rows = [(list(r["evec"]), r["enrm"]) for r in ev.collect()]
-        if not ev_rows:
-            return hd_tr.filter(F.lit(False)).select(
-                *keys,
-                F.lit(None).cast("double").alias("mc"),
-                F.lit(None).cast("bigint").alias("hits"),
-            )
-        bc = hd_tr.sparkSession.sparkContext.broadcast(ev_rows)
-        stats = _sem_dims_stats_udf(bc, thresh, _SEMDECON_D)
+        bc = _sem_eval_side(ev)
+        if bc is None:
+            return _sem_none(hd_tr, *keys)
+        stats = _sem_dims_stats_udf(bc, thresh)
         st = hd_tr.select(*keys, stats(F.col("dims")).alias("_st"))
-        return st.select(
-            *keys,
-            F.col("_st.mc").alias("mc"),
-            F.col("_st.hits").alias("hits"),
-        )
+        return st.select(*keys, "_st.mc", "_st.hits")
     vec = F.expr(
         f"transform(sequence(0, {_SEMDECON_D - 1}),"
         f" d -> cast(size(filter(dims, h -> h = cast(d as bigint)))"
@@ -1488,70 +1427,31 @@ def _sem_exposure_stats(
     """The exposure direction: per EVAL doc, (mc, hits) over every
     train doc. The streamed side is the corpus, so the kernel emits
     per-batch PARTIALS — |eval| rows of (eid, pmax, phits) per Arrow
-    batch — and a bounded groupBy(eid) combines them (guide §2.3
-    aggregate-before-shuffle; max is order-independent, Spark's
-    NaN-greatest final max matches numpy's NaN-propagating partial,
-    and hit counts are exact integer partial sums)."""
+    batch, by _sem_dims_stats_udf's laws — and a bounded groupBy(eid)
+    combines them (guide §2.3 aggregate-before-shuffle; max is
+    order-independent, Spark's NaN-greatest final max matches numpy's
+    NaN-propagating partial, and hit counts are exact integer partial
+    sums). An empty batch emits nothing, so an empty train side emits
+    no rows, as the JVM crossJoin does."""
     if _SEM_PAIR_KERNEL:
-        ev_rows = [
-            (r["eid"], list(r["evec"]), r["enrm"]) for r in ev.collect()
-        ]
-        if not ev_rows:
-            return hd_tr.filter(F.lit(False)).select(
-                F.lit(None).cast("long").alias("eid"),
-                F.lit(None).cast("double").alias("mc"),
-                F.lit(None).cast("bigint").alias("hits"),
-            )
-        eids = [r[0] for r in ev_rows]
-        dd = _SEMDECON_D
-        bc = hd_tr.sparkSession.sparkContext.broadcast(ev_rows)
+        bc = _sem_eval_side(ev)
+        if bc is None:
+            return _sem_none(hd_tr, F.lit(None).cast("long").alias("eid"))
 
-        def _partials(batches):
-            import numpy as np
-            import pandas as pd
-
-            rows = bc.value
-            E = np.array([list(r[1]) for r in rows], dtype=np.float64)
-            en = np.array([r[2] for r in rows], dtype=np.float64)
-            for pdf in batches:
-                dims = pdf["dims"]
-                n = len(dims)
-                if n == 0:
+        def _partials(batches):  # type: ignore[no-untyped-def]
+            E, en, eok, eid = bc.value
+            for b in batches:
+                if b.num_rows == 0:
                     continue
-                V = np.zeros((n, dd), dtype=np.float64)
-                for i, d in enumerate(dims):
-                    if d is not None and len(d):
-                        V[i] = np.bincount(
-                            np.asarray(d, dtype=np.int64), minlength=dd
-                        )
-                nrm = np.zeros(n, dtype=np.float64)
-                for d in range(dd):
-                    nrm += V[:, d] * V[:, d]
-                nrm = np.sqrt(nrm)
-                dots = np.zeros((n, E.shape[0]), dtype=np.float64)
-                for d in range(dd):
-                    dots += V[:, d : d + 1] * E[None, :, d]
-                den = nrm[:, None] * en[None, :]
-                valid = den != 0.0  # Spark ANSI-off: x / 0.0 is NULL
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    c = dots / den
-                any_valid = valid.any(axis=0)
-                pmaxs = np.max(np.where(valid, c, -np.inf), axis=0)
-                pmax = [
-                    float(pmaxs[j]) if any_valid[j] else None
-                    for j in range(E.shape[0])
-                ]
-                yield pd.DataFrame(
-                    {
-                        "eid": eids,
-                        "pmax": pd.Series(pmax, dtype=object),
-                        "phits": (((c >= thresh) | np.isnan(c)) & valid)
-                        .sum(axis=0)
-                        .astype(np.int64),
-                    }
+                V = ab.count_rows(b.column(0), _SEMDECON_D)
+                mc, hits = ab.cos_stats(
+                    V, ab.l2_rows(V), E, en, thresh, eok[None, :], axis=0
+                )
+                yield pa.RecordBatch.from_arrays(
+                    [eid, mc, hits], names=["eid", "pmax", "phits"]
                 )
 
-        part = hd_tr.select("dims").mapInPandas(
+        part = hd_tr.select("dims").mapInArrow(
             _partials, "eid long, pmax double, phits long"
         )
         return part.groupBy("eid").agg(
@@ -1585,25 +1485,12 @@ def _sem_pair_stats(tr: DataFrame, ev: DataFrame, thresh: float) -> DataFrame:
     reference implementation both tiers are pinned against."""
     keys = [c for c in tr.columns if c not in ("vec", "nrm")]
     if _SEM_PAIR_KERNEL:
-        ev_rows = [(list(r["evec"]), r["enrm"]) for r in ev.collect()]
-        if not ev_rows:
-            # The JVM form's crossJoin against an empty eval side emits
-            # no rows; the emptiness is build-time knowledge here, so no
-            # filter ever touches the UDF output (a filter on a Python-
-            # UDF column is the guide §4.4 duplication/pushdown trap).
-            return tr.filter(F.lit(False)).select(
-                *keys,
-                F.lit(None).cast("double").alias("mc"),
-                F.lit(None).cast("bigint").alias("hits"),
-            )
-        bc = tr.sparkSession.sparkContext.broadcast(ev_rows)
+        bc = _sem_eval_side(ev)
+        if bc is None:
+            return _sem_none(tr, *keys)
         stats = _sem_pair_stats_udf(bc, thresh)
         st = tr.select(*keys, stats(F.col("vec"), F.col("nrm")).alias("_st"))
-        return st.select(
-            *keys,
-            F.col("_st.mc").alias("mc"),
-            F.col("_st.hits").alias("hits"),
-        )
+        return st.select(*keys, "_st.mc", "_st.hits")
     scored = tr.crossJoin(F.broadcast(ev)).select(
         *keys, F.expr(_SEM_COS_SQL).alias("c")
     )
@@ -3548,36 +3435,6 @@ def _ccnet_scored(docs: DataFrame) -> DataFrame:
     )
     ex = base.select("doc_id", "lang", F.explode(grams).alias("g"))
     model, tot = _ccnet_model(ex)
-    from .knlm import _KN_TYPE_TERMS
-
-    if _KN_TYPE_TERMS:
-        # Per-TYPE term table (the knlm._kn_score_with_model
-        # rationale): round(-ln(p_eff), 7) is a pure function of
-        # (lang, g), so the model probes + ln/round run once per
-        # distinct gram type (charset³-bounded) and the occurrence
-        # stream pays one broadcast probe + one decimal add per gram.
-        # Identical term multiset per doc -> bit-equal decimal sum.
-        terms = (
-            ex.select("lang", "g")
-            .distinct()
-            .join(F.broadcast(model), ["lang", "g"], "left")
-            .join(F.broadcast(tot), ["lang"], "left")
-            .select(
-                "lang",
-                "g",
-                F.round(-F.log(_ccnet_p_eff()), 7)
-                .cast("decimal(28,9)")
-                .alias("t"),
-            )
-        )
-        return (
-            ex.join(F.broadcast(terms), ["lang", "g"])
-            .groupBy("doc_id", "lang")
-            .agg(
-                F.count("*").alias("n_grams"),
-                F.sum("t").cast("double").alias("s"),
-            )
-        )
     return (
         ex.join(F.broadcast(model), ["lang", "g"], "left")
         .join(F.broadcast(tot), ["lang"], "left")

@@ -34,6 +34,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..io import atomic_write
 from ..operators.similarity import ivf_assign, ivf_probe
 from .incremental_dedup import _FrozenQuantizerMixin, _PointerSink
 
@@ -183,10 +184,7 @@ class _FrozenCodebooksMixin:
                 k=self.k,
                 iters=2,
             )
-        tmp = self._codebooks_file() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(self.codebooks, fh)
-        os.replace(tmp, self._codebooks_file())
+        atomic_write(self._codebooks_file(), json.dumps(self.codebooks))
         return self.codebooks
 
 
@@ -431,10 +429,7 @@ class _FrozenRotationMixin:
     def _persist_rotation(self) -> None:
         import json
 
-        tmp = self._rotation_file() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(self.rotation, fh)
-        os.replace(tmp, self._rotation_file())
+        atomic_write(self._rotation_file(), json.dumps(self.rotation))
 
     def _load_or_require_opq_models(
         self,
@@ -475,10 +470,7 @@ class _FrozenRotationMixin:
                     "must be supplied (offline-trained) on first use"
                 ) from None
         self._persist_rotation()
-        tmp = self._codebooks_file() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(self.codebooks, fh)
-        os.replace(tmp, self._codebooks_file())
+        atomic_write(self._codebooks_file(), json.dumps(self.codebooks))
         return rot, self.codebooks
 
 
@@ -652,10 +644,7 @@ class _FrozenSqStatsMixin:
                 ).alias("mx"),
             ).collect()[0]
             self.stats = [list(row["mn"]), list(row["mx"])]
-        tmp = self._stats_file() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(self.stats, fh)
-        os.replace(tmp, self._stats_file())
+        atomic_write(self._stats_file(), json.dumps(self.stats))
         return self.stats
 
 

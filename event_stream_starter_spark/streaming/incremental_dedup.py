@@ -30,6 +30,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..io import atomic_write
 from ..operators.dedup import incremental_minhash_pairs, minhash_signatures
 
 
@@ -54,10 +55,7 @@ class _PointerSink:
             return -1
 
     def _commit(self, batch_id: int) -> None:
-        tmp = self._pointer() + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(batch_id))
-        os.replace(tmp, self._pointer())
+        atomic_write(self._pointer(), str(batch_id))
 
     def _read_dir(self, name: str, dedup_cols: list[str]) -> DataFrame | None:
         d = os.path.join(self.path, name)
@@ -222,10 +220,7 @@ class _FrozenQuantizerMixin:
     def _persist_centroids(self) -> None:
         import json
 
-        tmp = self._centroids_file() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(self.centroids, fh)
-        os.replace(tmp, self._centroids_file())
+        atomic_write(self._centroids_file(), json.dumps(self.centroids))
 
     def _load_centroids(self) -> list[list[float]]:
         """Read-path model load: the persisted sidecar ALWAYS wins, and

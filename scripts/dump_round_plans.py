@@ -1,26 +1,31 @@
 """Dump `.explain("formatted")` for named queries to
-plans/r11/<query>_<tag>.txt (the optimization round's evidence files).
+<out_dir>/<query>_<tag>.txt (an optimization round's evidence files,
+e.g. plans/r11).
 
-Usage: python scripts/dump_plans_r11.py <tag> q1 q2 ...
-Driver-side only (no job execution) — safe to run while other work runs.
+Usage: python scripts/dump_round_plans.py <out_dir> <tag> q1 q2 ...
+Reads the sf dir named by SPARK_GRAFT_SF_DIR (default: the sf0.1 copy
+under perfbench/data). The final queries are planned, not run (plan
+construction still runs its eager jobs).
 """
 
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from event_stream_starter_spark.queries import all_queries  # noqa: E402
 from event_stream_starter_spark.session import get_spark  # noqa: E402
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r11")
+SF_DIR = os.environ.get(
+    "SPARK_GRAFT_SF_DIR", os.path.join(REPO, "perfbench", "data", "sf0.1")
+)
 
-tag = sys.argv[1]
-names = sys.argv[2:]
-assert names, "pass a tag then query names"
+if len(sys.argv) < 4:
+    sys.exit(__doc__)
+OUT, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
 
-spark = get_spark("ess-plans-r11")
+spark = get_spark("ess-round-plans")
 spark.sparkContext.setLogLevel("ERROR")
 specs = all_queries()
 os.makedirs(OUT, exist_ok=True)

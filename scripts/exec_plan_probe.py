@@ -1,7 +1,7 @@
 """Run named queries once with the noop sink and print the AQE FINAL
 executed plan's operator census (ReusedExchange / Exchange / joins /
 Python evals) plus wall time — the runtime-truth companion to
-dump_plans_r10.py (initial plans can't show exchange reuse).
+dump_round_plans.py (initial plans can't show exchange reuse).
 
 Usage: python scripts/exec_plan_probe.py q1 q2 ...
 """
