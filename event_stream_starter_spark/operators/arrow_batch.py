@@ -58,20 +58,19 @@ def dense_rows(
     return x[idx], null[idx], valid & (lens != width)
 
 
-def count_rows(arr: pa.Array, dd: int) -> np.ndarray:
-    """(n, dd) float64 counts of each value 0..dd-1 per row: the
-    ``size(filter(row, h -> h = d))`` law. NULL elements and values
-    outside [0, dd) are not counted; a NULL row counts -1 in every dim,
-    since ANSI-off ``size(NULL)`` is -1."""
+def count_rows(arr: pa.Array, dd: int) -> tuple[np.ndarray, np.ndarray]:
+    """(n, dd) float64 counts of each value 0..dd-1 per row, and the
+    NULL-row mask: the ``array_size(filter(row, h -> h = d))`` law.
+    NULL elements and values outside [0, dd) are not counted; a NULL
+    row has only NULL counts, as ``array_size(NULL)`` and DuckDB's
+    ``len(NULL)`` do, so it reads 0 and is marked in the mask."""
     off, valid = _rows(arr)
     n = len(arr)
     v = arr.values.fill_null(-1).to_numpy(zero_copy_only=False)[off[0] : off[-1]]
     rows = np.repeat(np.arange(n), np.diff(off))
     keep = (v >= 0) & (v < dd)
     out = np.bincount(rows[keep] * dd + v[keep], minlength=n * dd)
-    out = out.reshape(n, dd).astype(np.float64)
-    out[~valid] = -1.0
-    return out
+    return out.reshape(n, dd).astype(np.float64), ~valid
 
 
 def l2_rows(V: np.ndarray) -> np.ndarray:

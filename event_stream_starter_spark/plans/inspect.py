@@ -10,7 +10,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _explain(df: DataFrame, mode: str = "formatted") -> str:
@@ -60,3 +60,15 @@ def plan_features(df: DataFrame) -> PlanFeatures:
         ),
         has_cartesian="CartesianProduct" in plan,
     )
+
+
+def codegen_stats(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, compile ms) by whole-stage and expression
+    codegen in this JVM since it started. A class served from Spark's
+    codegen cache is not compiled again, so the delta across a step is
+    the step's cache misses."""
+    jvm = spark._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    n = compiles.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(n), ns / 1e6

@@ -1286,6 +1286,19 @@ def x_decontaminate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEMDECON_T = 0.95
 _SEMDECON_D = 64
 
+# A doc's hashing vector from its hashed token ``dims``: per dim, the
+# count of tokens hashed there. ``array_size``, not ``size``: ANSI-off
+# ``size(NULL)`` is -1, which scored a NULL-text doc as the all -1
+# vector. DuckDB's ``len(NULL)`` is NULL, so a NULL dims row's vector
+# holds only NULLs, and its norm and every cosine are NULL. The oracles
+# make that vector NULL outright, since DuckDB's
+# ``list_cosine_similarity`` raises on a list holding NULLs.
+_SEM_VEC_SQL = (
+    f"transform(sequence(0, {_SEMDECON_D - 1}),"
+    f" d -> cast(array_size(filter(dims, h -> h = cast(d as bigint)))"
+    f" as double))"
+)
+
 # Per-ROW L2 norm and the norm-hoisted pair cosine: the norm sqrt runs
 # once per vector row (corpus side as a column, eval side inside the
 # broadcast), so the per-pair expression is a single 64-wide dot — same
@@ -1380,17 +1393,16 @@ def _sem_dims_stats_udf(bc, thresh: float):
     in one boundary crossing (ab.count_rows, the _SEM_NORM_SQL fold
     ab.l2_rows, then ab.cos_stats).
     NULL elements and values outside [0, _SEMDECON_D) are not counted;
-    a NULL dims row counts -1 in every dim, as ANSI-off ``size(NULL)``
-    does in the JVM form, so its cosines are those of the all -1
-    vector; an empty row is the zero vector, whose cosines are NULL."""
+    a NULL dims row (a NULL-text doc) has only NULL cosines, mc NULL and
+    0 hits, as its all-NULL _SEM_VEC_SQL vector has in the JVM form; an
+    empty row is the zero vector, whose cosines are NULL."""
 
     @F.arrow_udf("struct<mc: double, hits: bigint>")
     def _stats(dims):  # type: ignore[no-untyped-def]
         E, en, eok, _ = bc.value
-        V = ab.count_rows(dims, _SEMDECON_D)
-        mc, hits = ab.cos_stats(
-            V, ab.l2_rows(V), E, en, thresh, eok[None, :], axis=1
-        )
+        V, vnull = ab.count_rows(dims, _SEMDECON_D)
+        ok = ~vnull[:, None] & eok[None, :]
+        mc, hits = ab.cos_stats(V, ab.l2_rows(V), E, en, thresh, ok, axis=1)
         return pa.StructArray.from_arrays([mc, hits], names=["mc", "hits"])
 
     return _stats
@@ -1410,11 +1422,7 @@ def _sem_dims_stats(hd_tr: DataFrame, ev: DataFrame, thresh: float) -> DataFrame
         stats = _sem_dims_stats_udf(bc, thresh)
         st = hd_tr.select(*keys, stats(F.col("dims")).alias("_st"))
         return st.select(*keys, "_st.mc", "_st.hits")
-    vec = F.expr(
-        f"transform(sequence(0, {_SEMDECON_D - 1}),"
-        f" d -> cast(size(filter(dims, h -> h = cast(d as bigint)))"
-        f" as double))"
-    )
+    vec = F.expr(_SEM_VEC_SQL)
     tr = hd_tr.select(*keys, vec.alias("vec")).withColumn(
         "nrm", F.expr(_SEM_NORM_SQL)
     )
@@ -1427,7 +1435,8 @@ def _sem_exposure_stats(
     """The exposure direction: per EVAL doc, (mc, hits) over every
     train doc. The streamed side is the corpus, so the kernel emits
     per-batch PARTIALS — |eval| rows of (eid, pmax, phits) per Arrow
-    batch, by _sem_dims_stats_udf's laws — and a bounded groupBy(eid)
+    batch, by _sem_dims_stats_udf's laws (a NULL dims row pairs to NULL
+    cosines with every eval doc) — and a bounded groupBy(eid)
     combines them (guide §2.3 aggregate-before-shuffle; max is
     order-independent, Spark's NaN-greatest final max matches numpy's
     NaN-propagating partial, and hit counts are exact integer partial
@@ -1443,9 +1452,10 @@ def _sem_exposure_stats(
             for b in batches:
                 if b.num_rows == 0:
                     continue
-                V = ab.count_rows(b.column(0), _SEMDECON_D)
+                V, vnull = ab.count_rows(b.column(0), _SEMDECON_D)
+                ok = ~vnull[:, None] & eok[None, :]
                 mc, hits = ab.cos_stats(
-                    V, ab.l2_rows(V), E, en, thresh, eok[None, :], axis=0
+                    V, ab.l2_rows(V), E, en, thresh, ok, axis=0
                 )
                 yield pa.RecordBatch.from_arrays(
                     [eid, mc, hits], names=["eid", "pmax", "phits"]
@@ -1458,11 +1468,7 @@ def _sem_exposure_stats(
             F.max("pmax").alias("mc"),
             F.sum("phits").cast("bigint").alias("hits"),
         )
-    vec = F.expr(
-        f"transform(sequence(0, {_SEMDECON_D - 1}),"
-        f" d -> cast(size(filter(dims, h -> h = cast(d as bigint)))"
-        f" as double))"
-    )
+    vec = F.expr(_SEM_VEC_SQL)
     nrm = F.expr(_SEM_NORM_SQL)
     tr = hd_tr.select(vec.alias("vec")).withColumn("nrm", nrm)
     cos = F.expr(
@@ -1516,9 +1522,10 @@ def _sem_pair_stats(tr: DataFrame, ev: DataFrame, thresh: float) -> DataFrame:
         FROM t
     ), v AS (
         SELECT doc_id, source,
+               CASE WHEN dims IS NOT NULL THEN
                list_transform(generate_series(0, {_SEMDECON_D - 1}),
                    d -> CAST(len(list_filter(dims, h -> h = d)) AS DOUBLE))
-                   AS vec
+               END AS vec
         FROM hd
     ), ev AS (
         SELECT doc_id, vec FROM v WHERE source = '{_EVAL_SRC}'
@@ -1570,11 +1577,7 @@ def x_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("bigint")
         % _SEMDECON_D,
     )
-    vec = F.expr(
-        f"transform(sequence(0, {_SEMDECON_D - 1}),"
-        f" d -> cast(size(filter(dims, h -> h = cast(d as bigint)))"
-        f" as double))"
-    )
+    vec = F.expr(_SEM_VEC_SQL)
     hd = docs.select("doc_id", "source", dims.alias("dims"))
     # Eval side: JVM-featurized (bounded, source-pruned scan) with the
     # hoisted norm; train side ships only the hashed dims through the
@@ -1612,9 +1615,10 @@ def x_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM t
     ), v AS (
         SELECT doc_id, source,
+               CASE WHEN dims IS NOT NULL THEN
                list_transform(generate_series(0, {_SEMDECON_D - 1}),
                    d -> CAST(len(list_filter(dims, h -> h = d)) AS DOUBLE))
-                   AS vec
+               END AS vec
         FROM hd
     ), ev AS (
         SELECT doc_id, vec FROM v WHERE source = '{_EVAL_SRC}'
@@ -1661,11 +1665,7 @@ def x_semantic_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("bigint")
         % _SEMDECON_D,
     )
-    vec = F.expr(
-        f"transform(sequence(0, {_SEMDECON_D - 1}),"
-        f" d -> cast(size(filter(dims, h -> h = cast(d as bigint)))"
-        f" as double))"
-    )
+    vec = F.expr(_SEM_VEC_SQL)
     hd = docs.select("doc_id", "source", dims.alias("dims"))
     ev = (
         hd.filter(F.col("source") == _EVAL_SRC)

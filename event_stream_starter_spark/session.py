@@ -14,6 +14,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of physical memory, capped at 24g: a heap near the machine's
+    RAM lets the driver JVM outgrow it and be OOM-killed mid-run."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(24 * 1024, phys_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "event-stream-starter-spark",
     cpus: int | None = None,
@@ -42,10 +49,23 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Spark caches generated classes in one JVM-wide cache of 100 by
+        # default. One curation round (a dd_cluster_canonical pass, the BPE
+        # UDF pass and a ReadApi round) compiles about 140 distinct
+        # classes, so each round evicted the last one's and every pass paid
+        # Janino compiles plus un-JITted code again. A read round also adds
+        # about 10-17 new classes, because a numeric-key point read inlines
+        # its key as a Java literal. 1000 holds the working set plus dozens
+        # of rounds of that churn, and eviction keeps the hot pass classes.
+        # Static: only sessions built here get it.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # local[N] runs every task inside the driver JVM: size the heap for
         # N concurrent shuffle tasks or GC pauses dominate the measurement
         # (an 8g heap showed multi-second full-GC stalls under 32 threads).
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
@@ -57,7 +77,10 @@ def tune_session(spark: SparkSession) -> SparkSession:
     The correctness driver owns its own SparkSession; queries must behave
     identically there, so anything correctness-critical (UTC timestamps,
     ANSI-off arithmetic) is set here via runtime confs, while anything that
-    is merely a performance default is best-effort.
+    is merely a performance default is best-effort. Static confs cannot be
+    set on a session the driver already owns, so ``get_spark``'s codegen
+    class cache size (``spark.sql.codegen.cache.maxEntries``) and heap do
+    not reach it.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # The docstring's promise made real: ANSI-off is runtime-settable and

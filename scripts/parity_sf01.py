@@ -14,11 +14,22 @@ shard/top-k twins). Same dtype-strict compare as the driver replica.
 
 Run:  python scripts/parity_sf01.py          (~4 min on local[8])
 Result recorded in COVERAGE.md ("Oracle parity at sf0.1").
+
+With ``--all [out.json]`` it instead checks EVERY registered query
+(sf0.01 by default, ``SPARK_GRAFT_SF_DIR`` to change it) and writes the
+per-query status as an artifact (default ``PARITY.json`` at the repo
+root): {"sf_dir", "n_queries", "n_match", "n_rows_only", "n_mismatch",
+"per_query": {name: "MATCH" | "rows_only:<n>" | "MISMATCH:<problems>"}}.
+The external driver samples only 50 queries, so this is where a
+family's correctness is published.
 """
+import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 from pyspark.sql import SparkSession
 
 spark = (
@@ -78,8 +89,45 @@ ROUND9 = [
 
 qs = E.queries()
 oracles = E.oracle_sql()
-con = duck_connection(SF)
 
+
+def publish_all(sf: str, out: str) -> int:
+    """Every registered query against its oracle (rows only where it has
+    none); writes the artifact and returns the mismatch count."""
+    con = duck_connection(sf)
+    per_query = {}
+    for name, fn in sorted(qs.items()):
+        sdf = fn(spark, sf)
+        if name not in oracles:
+            per_query[name] = f"rows_only:{sdf.count()}"
+            continue
+        problems = compare(sdf, con, oracles[name])
+        per_query[name] = f"MISMATCH:{problems}" if problems else "MATCH"
+        print(name, per_query[name])
+    n = {k: sum(v.startswith(k) for v in per_query.values())
+         for k in ("MATCH", "rows_only", "MISMATCH")}
+    doc = {
+        "sf_dir": sf,
+        "n_queries": len(per_query),
+        "n_match": n["MATCH"],
+        "n_rows_only": n["rows_only"],
+        "n_mismatch": n["MISMATCH"],
+        "per_query": per_query,
+    }
+    with open(out, "w") as f:
+        json.dump(doc, f, indent=1, sort_keys=True)
+        f.write("\n")
+    print(f"wrote {out}: {n['MATCH']} MATCH / {n['rows_only']} rows-only / "
+          f"{n['MISMATCH']} MISMATCH over {len(per_query)} queries")
+    return n["MISMATCH"]
+
+
+if sys.argv[1:2] == ["--all"]:
+    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, "PARITY.json")
+    sf = os.environ.get("SPARK_GRAFT_SF_DIR", os.path.join(os.path.dirname(SF), "sf0.01"))
+    sys.exit(1 if publish_all(sf, out) else 0)
+
+con = duck_connection(SF)
 fails = []
 for name in TOP_COST + APPROX_ADJACENT + ROUND9:
     assert name in oracles, f"{name} has no oracle"

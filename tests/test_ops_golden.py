@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 import duckdb
+import pytest
 
 from event_stream_starter_spark.queries import all_queries
 from event_stream_starter_spark.queries.ops import COOLDOWN_SEC
@@ -672,6 +673,52 @@ def test_source_quality_gate_flags_each_arm(spark, tmp_path):
     # the median arm specifically (its share arm must NOT be what fired)
     if med["low_q_share"] < 0.25:
         assert med["p50_quality"] < 0.58
+
+
+@pytest.mark.parametrize("side", ["train", "eval"])
+def test_semantic_screens_null_text_match_oracle(spark, sf_dir, tmp_path, side):
+    """A NULL-text doc has NULL dims. Both screens, in both tiers, must
+    then give it NULL cosines (max cos NULL, 0 hits, flag NULL) as the
+    DuckDB oracles do, not score it as a finite vector (ANSI-off
+    ``size(NULL)`` is -1)."""
+    import pyspark.sql.functions as F
+
+    from event_stream_starter_spark.io import load_table
+    from event_stream_starter_spark.queries import textdata as td
+    from tests.oracle_utils import compare
+
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang", "source", "n_chars"
+    )
+    tiny = docs.filter(F.col("source").isin(td._EVAL_SRC, "src1", "src2"))
+    src = td._EVAL_SRC if side == "eval" else "src1"
+    null_doc = spark.createDataFrame(
+        [(10**9, None, "en", src, None)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    path = str(tmp_path / "documents.parquet")
+    tiny.unionByName(null_doc).coalesce(1).write.parquet(path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}/*.parquet')")
+
+    qs = all_queries()
+    old = td._SEM_PAIR_KERNEL
+    try:
+        # Each screen emits one row per doc of one side only.
+        for name, out_side in (
+            ("x_semantic_decontaminate", "train"),
+            ("x_semantic_exposure", "eval"),
+        ):
+            for kernel in (True, False):
+                td._SEM_PAIR_KERNEL = kernel
+                df = qs[name].fn(spark, str(tmp_path))
+                problems = compare(df, con, qs[name].oracle)
+                assert not problems, (name, kernel, problems)
+                got = df.filter(F.col("doc_id") == 10**9).collect()
+                want = [(None, 0, None)] if side == out_side else []
+                assert [tuple(r)[-3:] for r in got] == want, (name, kernel, got)
+    finally:
+        td._SEM_PAIR_KERNEL = old
 
 
 def test_sem_pair_kernel_equals_hof_tier(spark, sf_dir):
