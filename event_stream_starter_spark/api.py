@@ -4,26 +4,36 @@ query surface (SURVEY.md §2.13, api/main.py:184-211 endpoint table).
 The reference serves these via FastAPI over Postgres; here each endpoint
 is a method returning a DataFrame (callers collect or serve it — the
 HTTP layer itself is out of engine scope, like any Spark deployment).
-What IS in scope, and mirrored here, is the QUERY each endpoint runs and
-its scale posture:
+Each endpoint's answer is the registered query that the oracle checks,
+reused verbatim, so the facade cannot drift from the tested semantics.
 
-- point lookups (`signals/{event_key}`) are key-predicate filters that
-  push down to the scan (asserted in tests/test_api.py via the optimized
-  plan) — at 100TB these hit partition/bucket pruning, not a full scan;
-- list endpoints reuse the registered query builders verbatim, so the
-  facade can never drift from the oracle-checked semantics;
-- the reference's per-endpoint caches (120 s summary cache, SWR dim
-  snapshots) map to Spark-side snapshot reuse: `cache()` on a bounded
-  result, refreshed by the caller's cadence (see sources/dimensions.py
-  for the SWR contract).
+The reference's jobs write tables and its API reads them through
+response caches (api/cache.py:240-396, the 120 s summary cache). Here
+each endpoint holds one snapshot of its whole answer, as an Arrow table,
+keyed by ``io.inputs_version``: the stat of every data file of the
+testdata tables and of the hot-reloaded rule configs, a superset of
+what any endpoint reads. None of the endpoint queries reads the clock,
+so the snapshot is exact: there is no TTL, and a read whose inputs
+changed rebuilds it before answering. A read served from the snapshot
+runs no Spark job and compiles no class:
+the answer is a ``LocalTableScan`` over the snapshot, or over the rows
+of one key for a keyed read (filtered in Arrow), and a caller's
+``.limit(n)`` folds into it. Key laws follow the ``col == key`` filter:
+``None`` returns the whole answer, an absent key or ``""`` on a string
+key returns no rows, and a NULL key cell never matches.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from .io import load_table
+from .io import inputs_version, load_table
 from .queries import all_queries
 
 
@@ -65,6 +75,21 @@ def register_catalog(
     return names
 
 
+@dataclass
+class _Snapshot:
+    """One endpoint's whole answer at one inputs version."""
+
+    version: tuple
+    table: pa.Table
+    schema: StructType
+    frame: DataFrame | None = None  # the whole answer, made on first use
+
+
+def _latest_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    return ev.agg(F.unix_micros(F.max("ts")).alias("latest_ts_us"))
+
+
 class ReadApi:
     """One instance per (spark, sf_dir) — the reference's app state.
 
@@ -76,48 +101,54 @@ class ReadApi:
         self.spark = spark
         self.sf_dir = sf_dir
         self._q = all_queries()
+        self._snaps: dict[str, _Snapshot] = {}
 
-    def _run(self, name: str) -> DataFrame:
-        return self._q[name].fn(self.spark, self.sf_dir)
+    def _serve(self, name: str, key_col: str | None = None, key=None, build=None) -> DataFrame:
+        """The answer of registered query ``name`` (or of ``build(spark,
+        sf_dir)``), or only its rows where ``key_col == key`` when ``key``
+        is not None. It comes from the snapshot of ``name``, rebuilt when
+        the inputs version differs from the one it was built at. The
+        version is read before the build, so a file that changes during a
+        build makes the next read rebuild again."""
+        version = inputs_version(self.sf_dir)
+        snap = self._snaps.get(name)
+        if snap is None or snap.version != version:
+            df = (build or self._q[name].fn)(self.spark, self.sf_dir)
+            snap = self._snaps[name] = _Snapshot(version, df.toArrow(), df.schema)
+        if key is None:
+            if snap.frame is None:
+                snap.frame = self.spark.createDataFrame(snap.table, snap.schema)
+            return snap.frame
+        rows = snap.table.filter(pc.equal(snap.table[key_col], key))
+        return self.spark.createDataFrame(rows, snap.schema)
 
     # -- signals ----------------------------------------------------------
 
     def signals_heat(self, event_type: str | None = None) -> DataFrame:
         """GET /signals/heat?token — A3 trailing counts + W5 slope/trend.
 
-        Reference: api/routes/signals_heat.py:28-142. The token filter is
-        a pushed-down predicate on the group key.
+        Reference: api/routes/signals_heat.py:28-142. The token selects
+        one group key; an empty-string token from the HTTP layer selects
+        zero rows, not all of them.
         """
-        df = self._run("a3_w5_heat_slope")
-        # `is not None`, not truthiness: an empty-string token from the
-        # HTTP layer must filter to zero rows, not silently return all.
-        return (
-            df.filter(F.col("event_type") == event_type)
-            if event_type is not None
-            else df
-        )
+        return self._serve("a3_w5_heat_slope", "event_type", event_type)
 
-    def signals_summary(self, event_id: int) -> DataFrame:
+    def signals_summary(self, event_id: int | None = None) -> DataFrame:
         """GET /signals/{event_key} — point lookup + R6 verdict.
 
-        Reference: api/routes/signals_summary.py:65-253 (120s cache —
-        callers cache() the bounded result and re-call on expiry). The
-        driver events table keys rows by event_id; the reference's
-        event_key is the same point-lookup shape (C4/C5 derived key).
+        Reference: api/routes/signals_summary.py:65-253 (its 120 s cache
+        is the snapshot here). The driver events table keys rows by
+        event_id; the reference's event_key is the same point-lookup
+        shape (C4/C5 derived key).
         """
-        return self._run("r6_onchain_verdict").filter(F.col("event_id") == event_id)
+        return self._serve("r6_onchain_verdict", "event_id", event_id)
 
     def signals_topic(self, topic_hash: str | None = None) -> DataFrame:
         """GET /signals/topic — A2 topic aggregate (mentions, entities).
 
         Reference: api/routes/signals_topic.py:17-50.
         """
-        df = self._run("a2_topic_aggregate")
-        return (
-            df.filter(F.col("topic_hash") == topic_hash)
-            if topic_hash is not None
-            else df
-        )
+        return self._serve("a2_topic_aggregate", "topic_hash", topic_hash)
 
     # -- rules ------------------------------------------------------------
 
@@ -127,8 +158,7 @@ class ReadApi:
         Reference: api/routes/rules.py:24-205. The J4 merge itself is the
         oracle-checked j4_rules_context_merge; scoring is r1_rules_eval.
         """
-        df = self._run("r1_rules_eval")
-        return df.filter(F.col("event_id") == event_id) if event_id is not None else df
+        return self._serve("r1_rules_eval", "event_id", event_id)
 
     # -- onchain ----------------------------------------------------------
 
@@ -137,21 +167,19 @@ class ReadApi:
 
         Reference: api/routes/onchain.py:51-160.
         """
-        df = self._run("w7_latest_per_key")
-        return df.filter(F.col("user_id") == user_id) if user_id is not None else df
+        return self._serve("w7_latest_per_key", "user_id", user_id)
 
     def onchain_freshness(self) -> DataFrame:
         """GET /onchain/freshness — max ingested timestamp (the reference's
         max-block probe). Reference: api/routes/onchain.py:163-295."""
-        ev = load_table(self.spark, self.sf_dir, "events")
-        return ev.agg(F.unix_micros(F.max("ts")).alias("latest_ts_us"))
+        return self._serve("onchain_freshness", build=_latest_ts)
 
     def expert_onchain(self) -> DataFrame:
         """GET /expert/onchain — W8 windowed series grid.
 
         Reference: api/routes_expert_onchain.py:338-463.
         """
-        return self._run("w8_series_split")
+        return self._serve("w8_series_split")
 
     # -- cards ------------------------------------------------------------
 
@@ -160,7 +188,7 @@ class ReadApi:
 
         Reference: api/routes/cards.py:19.
         """
-        return self._run("j3_card_merge")
+        return self._serve("j3_card_merge")
 
     # -- security / sentiment ---------------------------------------------
 
@@ -169,14 +197,14 @@ class ReadApi:
 
         Reference: api/routes/security.py:50-142.
         """
-        return self._run("r7_risk_label")
+        return self._serve("r7_risk_label")
 
     def sentiment(self) -> DataFrame:
         """GET /sentiment — U1/C11 lexicon sentiment.
 
         Reference: api/sentiment/router.py:18-31.
         """
-        return self._run("c11_lexicon_sentiment")
+        return self._serve("c11_lexicon_sentiment")
 
     # -- health -----------------------------------------------------------
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import json
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -159,21 +160,64 @@ def _managed_schema(spark: SparkSession, managed: str) -> StructType:
     return schema
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def table_path(sf_dir: str, name: str) -> str:
+    """Where ``name`` is read from: the managed copy once
+    ingest_managed has made it, else the raw ``<name>.parquet``."""
     managed = os.path.join(_managed_dir(sf_dir), f"{name}.parquet")
-    if os.path.isdir(managed):
+    return managed if os.path.isdir(managed) else os.path.join(sf_dir, f"{name}.parquet")
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    path = table_path(sf_dir, name)
+    if os.path.dirname(path) == _managed_dir(sf_dir):
         # Managed copy is already normalized (types + multi-file layout);
         # still apply the scan-parallelism floor — a small compute-dense
         # table (embeddings, documents) can land in 1-2 files whose
         # downstream per-row work needs all cores (measured 8x on the
         # embedding self-join when read as a single split).
-        schema = _managed_schema(spark, managed)
-        return _spread(spark, spark.read.schema(schema).parquet(managed), managed)
-    path = os.path.join(sf_dir, f"{name}.parquet")
+        schema = _managed_schema(spark, path)
+        return _spread(spark, spark.read.schema(schema).parquet(path), path)
     return _spread(spark, _load_raw(spark, sf_dir, name), path)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+def _hidden(name: str) -> bool:
+    # Spark's file index skips these names; so does the version, which
+    # makes writing the ``_schema.json`` sidecar on a first load no change.
+    return name.startswith(("_", "."))
+
+
+def _stat_tree(path: str) -> list[tuple]:
+    """``(path, inode, mtime_ns, size)`` of the file at ``path``, or of
+    every data file under it when it is a directory; ``(path,)`` when it
+    is missing, so its later creation is a change too."""
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return [(path,)]
+    if not stat.S_ISDIR(st.st_mode):
+        return [(path, st.st_ino, st.st_mtime_ns, st.st_size)]
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not _hidden(d))
+        for f in sorted(files):
+            if not _hidden(f):
+                out.extend(_stat_tree(os.path.join(root, f)))
+    return out
+
+
+def inputs_version(sf_dir: str) -> tuple:
+    """The version of everything a read-path answer over ``sf_dir`` can
+    depend on: the stat of each data file of the testdata tables, at the
+    path load_table reads them from, and of the two rule configs that
+    r1_rules_eval and r6_onchain_verdict hot-reload by mtime and size.
+    A rewritten, added or removed file changes it. About 0.25 ms per call
+    for all tables of a managed copy."""
+    from .queries import rules_q
     from .schemas import TESTDATA_TABLES
 
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
+    out: list[tuple] = []
+    for t in TESTDATA_TABLES:
+        out.extend(_stat_tree(table_path(sf_dir, t)))
+    for p in (rules_q.RULES_YML, rules_q.ONCHAIN_YML):
+        out.extend(_stat_tree(p))
+    return tuple(out)

@@ -37,31 +37,6 @@ def exact_dedup(
     )
 
 
-def windowed_dedup(
-    df: DataFrame,
-    key: Column,
-    ts_col: str,
-    window_sec: int,
-    order_tiebreak: Sequence[str] = (),
-) -> DataFrame:
-    """D3: is_duplicate(key, ts) within window_sec → keep first per
-    (key, time-bucket).
-
-    Reference: api/dedup.py:17-134 (default window 3600s). Bucketed
-    approximation of the reference's rolling TTL: duplicates within the
-    same aligned bucket collapse; the streaming engine uses
-    dropDuplicatesWithinWatermark for the rolling variant.
-    """
-    bucket = F.floor(F.col(ts_col).cast("long") / window_sec)
-    order = [F.col(ts_col).asc()] + [F.col(t).asc() for t in order_tiebreak]
-    w = Window.partitionBy(key, bucket).orderBy(*order)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Near-duplicate family over documents
 # ---------------------------------------------------------------------------
@@ -337,17 +312,6 @@ def minhash_signature_sql(col_name: str, num_hashes: int = 64) -> str:
         for i in range(num_hashes)
     )
     return f"array({mins})"
-
-
-def minhash_signature(shingle_hashes: Column, num_hashes: int = 64) -> Column:
-    """Column-API wrapper of minhash_signature_sql for callers that hold
-    an unnamed Column (tests, ad-hoc); query paths use the SQL form."""
-    return F.array(
-        *[
-            F.array_min(F.transform(shingle_hashes, lambda h: F.xxhash64(h, F.lit(i))))
-            for i in range(num_hashes)
-        ]
-    )
 
 
 def lsh_band_keys_sql(col_name: str, bands: int, rows_per_band: int) -> str:

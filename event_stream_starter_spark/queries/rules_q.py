@@ -49,10 +49,11 @@ def _projection_sql(k: str) -> list[str]:
 
 
 def _load_rules():
-    """Compile rules.yml once per (mtime, size) — the read-API facade
-    rebuilds DataFrames per request, and re-reading + re-compiling the
-    YAML on every build is pure driver overhead. The mtime key keeps the
-    hot-reload contract: an edited file recompiles on next use."""
+    """Compile rules.yml once per (mtime, size): re-reading and
+    re-compiling the YAML on every build of a query is pure driver
+    overhead. The mtime key keeps the hot-reload contract: an edited file
+    recompiles on next use (and changes io.inputs_version, so a ReadApi
+    snapshot built from the old rules is rebuilt)."""
     st = os.stat(RULES_YML)
     return _load_rules_cached(st.st_mtime_ns, st.st_size)
 

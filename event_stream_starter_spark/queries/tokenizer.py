@@ -973,13 +973,6 @@ def _ug_pieces_col() -> Column:
     )
 
 
-def _ug2_pieces_col() -> Column:
-    """The frozen PRUNED-unigram piece list (published-trainer model)."""
-    return ugm.viterbi_encode_words_expr(
-        _UG_WORDS_SPARK, _FROZEN_UNIGRAM_PRUNED, _UG_MAXLEN
-    )
-
-
 # One train per (process, sf_dir) — the _trained_merges memo pattern.
 _UG_MODEL_CACHE: dict[str, list[tuple[str, Decimal]]] = {}
 

@@ -53,10 +53,8 @@ def get_spark(
         # default. One curation round (a dd_cluster_canonical pass, the BPE
         # UDF pass and a ReadApi round) compiles about 140 distinct
         # classes, so each round evicted the last one's and every pass paid
-        # Janino compiles plus un-JITted code again. A read round also adds
-        # about 10-17 new classes, because a numeric-key point read inlines
-        # its key as a Java literal. 1000 holds the working set plus dozens
-        # of rounds of that churn, and eviction keeps the hot pass classes.
+        # Janino compiles plus un-JITted code again. 1000 holds that working
+        # set many times over, and eviction keeps the hot pass classes.
         # Static: only sessions built here get it.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         # local[N] runs every task inside the driver JVM: size the heap for

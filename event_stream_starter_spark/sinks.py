@@ -9,7 +9,7 @@ on the read side.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -22,10 +22,6 @@ def write_events_partitioned(df: DataFrame, path: str, ts_col: str = "ts") -> No
         .partitionBy("dt")
         .parquet(path)
     )
-
-
-def read_events_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def key_bucket(key: F.Column, n_buckets: int = 256) -> F.Column:

@@ -143,27 +143,6 @@ def events_jsonl_stream(
     return flagged.withColumn("ts", F.when(ts_sane, F.col("ts")))
 
 
-def events_csv_stream(
-    spark: SparkSession,
-    landing_dir: str,
-    max_files_per_trigger: int = 4,
-) -> DataFrame:
-    """CSV landing-dir stream with the same declared schema + corrupt
-    quarantine (bulk export/import path)."""
-    schema = StructType(
-        list(EVENTS_STREAM_SCHEMA.fields)
-        + [StructField("_corrupt", StringType(), True)]
-    )
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("header", "true")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt")
-        .csv(landing_dir)
-    )
-
-
 def events_orc_stream(
     spark: SparkSession,
     landing_dir: str,

@@ -1,21 +1,203 @@
-"""ReadApi facade: every §2.13 read endpoint answers from the engine,
-point lookups push their key predicate into the scan."""
+"""ReadApi facade: every §2.13 read endpoint answers from the engine.
+An endpoint serves its answer from a snapshot keyed by the version of
+its inputs: exact on every read, rebuilt when an input changes, and a
+warm read runs no Spark job and compiles no class."""
 
 from __future__ import annotations
 
+import datetime
+import os
+import shutil
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from event_stream_starter_spark import io as eio
 from event_stream_starter_spark.api import ReadApi
 from event_stream_starter_spark.plans import plan_features
+from event_stream_starter_spark.plans.inspect import codegen_stats
+from event_stream_starter_spark.queries import all_queries
+from event_stream_starter_spark.queries import rules_q
+from event_stream_starter_spark.schemas import TESTDATA_TABLES
+
+from tests.oracle_utils import compare, duck_connection
+
+# Keyed endpoint -> (registered query, key column).
+KEYED = {
+    "signals_heat": ("a3_w5_heat_slope", "event_type"),
+    "signals_summary": ("r6_onchain_verdict", "event_id"),
+    "rules_eval": ("r1_rules_eval", "event_id"),
+    "onchain_features": ("w7_latest_per_key", "user_id"),
+    "signals_topic": ("a2_topic_aggregate", "topic_hash"),
+}
+
+
+def _sorted_rows(df) -> list[str]:
+    return sorted(map(repr, df.collect()))
+
+
+def _run_in_group(spark, group: str, fn):
+    """fn() inside job group ``group``; returns the Spark job ids it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_point_lookup_pushes_key_predicate(spark, sf_dir):
-    api = ReadApi(spark, sf_dir)
-    df = api.rules_eval(event_id=7)
-    f = plan_features(df)
-    # The event_id filter must reach the parquet scan (at 100TB this is
-    # what partition/bucket pruning hangs off), not sit above the plan.
+    # The registered query behind rules_eval keeps its key pushdown: the
+    # event_id filter must reach the parquet scan (at 100TB this is what
+    # partition/bucket pruning hangs off), not sit above the plan.
+    q = all_queries()["r1_rules_eval"].fn(spark, sf_dir).filter(F.col("event_id") == 7)
+    f = plan_features(q)
     assert any("event_id" in p for p in f.pushed_filters), f.pushed_filters
+    # The read path serves the key from the endpoint's snapshot: a
+    # LocalTableScan holding exactly that key's row, and no scan.
+    df = ReadApi(spark, sf_dir).rules_eval(event_id=7)
+    plan = df._jdf.queryExecution().executedPlan()
+    assert plan.getClass().getSimpleName() == "LocalTableScanExec", plan.toString()
+    assert plan.rows().size() == 1
     rows = df.collect()
     assert len(rows) == 1 and rows[0]["event_id"] == 7
+    assert rows == q.collect()
+
+
+def test_keyed_reads_follow_the_filter_law_and_warm_reads_do_no_work(spark, sf_dir):
+    """Each keyed endpoint equals the recomputed ``query.filter(col ==
+    key)`` for a present key, an absent key, None (the whole answer), ""
+    on a string key and a Python int on a bigint column; then a warm round
+    over all eight endpoints starts no Spark job and compiles no class."""
+    api, specs = ReadApi(spark, sf_dir), all_queries()
+    warm_keys = {}
+    for name, (qname, col) in KEYED.items():
+        ref = specs[qname].fn(spark, sf_dir)
+        present = ref.select(col).dropna().orderBy(col).first()[0]
+        warm_keys[name] = present
+        if dict(ref.dtypes)[col] == "string":
+            keys = [present, "no-such-key", None, ""]
+        else:
+            assert dict(ref.dtypes)[col] == "bigint", (name, ref.dtypes)
+            assert type(present) is int
+            keys = [present, -1, None]
+        for key in keys:
+            want = ref if key is None else ref.filter(F.col(col) == key)
+            got = getattr(api, name)(key)
+            assert got.schema == ref.schema, (name, key)
+            assert _sorted_rows(got) == _sorted_rows(want), (name, key)
+        assert getattr(api, name)(present).count() > 0, name
+
+    def read_round():
+        for name, key in warm_keys.items():
+            assert getattr(api, name)(key).collect(), name
+        assert api.onchain_freshness().collect()
+        assert api.cards_preview().limit(50).collect()
+        assert api.expert_onchain().limit(50).collect()
+
+    read_round()  # builds the three unkeyed snapshots
+    before, _ = codegen_stats(spark)
+    jobs = _run_in_group(spark, "readapi-warm-round", read_round)
+    compiled = codegen_stats(spark)[0] - before
+    assert jobs == [], f"a warm read round started Spark jobs {jobs}"
+    assert compiled == 0, f"a warm read round compiled {compiled} classes"
+
+
+@pytest.mark.parametrize(
+    "name,qname",
+    [
+        ("expert_onchain", "w8_series_split"),
+        ("cards_preview", "j3_card_merge"),
+        ("security_token", "r7_risk_label"),
+        ("sentiment", "c11_lexicon_sentiment"),
+    ],
+)
+def test_unkeyed_snapshot_equals_its_query(spark, sf_dir, name, qname):
+    ref = all_queries()[qname].fn(spark, sf_dir)
+    got = getattr(ReadApi(spark, sf_dir), name)()
+    assert got.schema == ref.schema
+    assert _sorted_rows(got) == _sorted_rows(ref)
+
+
+def test_snapshot_rebuilds_exactly_when_an_input_changes(spark, sf_dir, tmp_path):
+    """A rewritten events table rebuilds the snapshots that read it, and
+    the new answers match the DuckDB oracle on the rewritten data; a read
+    with no file change reuses the snapshot and runs no Spark job."""
+    data = tmp_path / "sf"
+    data.mkdir()
+    for t in TESTDATA_TABLES:
+        shutil.copyfile(os.path.join(sf_dir, f"{t}.parquet"), data / f"{t}.parquet")
+    api, specs = ReadApi(spark, str(data)), all_queries()
+    key = 7
+    old_fresh = api.onchain_freshness().collect()[0]["latest_ts_us"]
+    assert api.signals_summary(key).count() == 1
+    snaps = dict(api._snaps)
+
+    jobs = _run_in_group(
+        spark, "readapi-unchanged",
+        lambda: (api.onchain_freshness().collect(), api.signals_summary(key).collect()),
+    )
+    assert jobs == [], jobs
+    assert all(api._snaps[n] is s for n, s in snaps.items())
+
+    # Rewrite events.parquet with one row whose ts is later than any other.
+    ev_path = data / "events.parquet"
+    ev = pq.read_table(ev_path)
+    new_id = pc.max(ev["event_id"]).as_py() + 1
+    last = ev.slice(ev.num_rows - 1, 1).to_pylist()[0]
+    last["event_id"] = new_id
+    last["ts"] = pc.max(ev["ts"]).as_py() + datetime.timedelta(hours=1)
+    grown = pa.concat_tables([ev, pa.Table.from_pylist([last], schema=ev.schema)])
+    pq.write_table(grown, str(ev_path) + ".tmp")
+    os.replace(str(ev_path) + ".tmp", ev_path)
+
+    con = duck_connection(str(data))
+    fresh = api.onchain_freshness()
+    assert api._snaps["onchain_freshness"] is not snaps["onchain_freshness"]
+    assert compare(fresh, con, "SELECT epoch_us(max(ts)) AS latest_ts_us FROM events") == []
+    assert fresh.collect()[0]["latest_ts_us"] > old_fresh
+    oracle = specs["r6_onchain_verdict"].oracle
+    for k in (key, new_id):
+        got = api.signals_summary(k)
+        assert compare(got, con, f"SELECT * FROM ({oracle}) WHERE event_id = {k}") == []
+        assert got.count() == 1
+    assert api._snaps["r6_onchain_verdict"] is not snaps["r6_onchain_verdict"]
+
+
+def test_inputs_version_follows_the_managed_copy(spark, sf_dir, tmp_path, monkeypatch):
+    """Once a managed copy exists the version stats its data files, as
+    load_table reads them; a first load writing the ``_schema.json``
+    sidecar is no change, a new data file is."""
+    monkeypatch.setattr(eio, "_MANAGED_ROOT", str(tmp_path))
+    raw = eio.inputs_version(sf_dir)
+    root = eio.ingest_managed(spark, sf_dir)
+    events = os.path.join(root, "events.parquet")
+    assert eio.table_path(sf_dir, "events") == events
+    managed = eio.inputs_version(sf_dir)
+    assert managed != raw
+    assert not os.path.exists(os.path.join(events, "_schema.json"))
+    eio.load_table(spark, sf_dir, "events")
+    assert os.path.isfile(os.path.join(events, "_schema.json"))
+    assert eio.inputs_version(sf_dir) == managed
+    part = next(f for f in sorted(os.listdir(events)) if f.endswith(".parquet"))
+    shutil.copyfile(os.path.join(events, part), os.path.join(events, "part-extra.parquet"))
+    assert eio.inputs_version(sf_dir) != managed
+
+
+@pytest.mark.parametrize("attr", ["RULES_YML", "ONCHAIN_YML"])
+def test_inputs_version_covers_the_rule_configs(sf_dir, tmp_path, monkeypatch, attr):
+    cfg = tmp_path / os.path.basename(getattr(rules_q, attr))
+    shutil.copyfile(getattr(rules_q, attr), cfg)
+    monkeypatch.setattr(rules_q, attr, str(cfg))
+    before = eio.inputs_version(sf_dir)
+    assert eio.inputs_version(sf_dir) == before
+    cfg.write_text(cfg.read_text() + "\n# edited\n")
+    assert eio.inputs_version(sf_dir) != before
 
 
 def test_signals_endpoints_shapes(spark, sf_dir):

@@ -725,9 +725,10 @@ def test_sem_pair_kernel_equals_hof_tier(spark, sf_dir):
     """The semantic screens' Arrow kernel tier (featurize + pair stats
     in one boundary crossing) must be BIT-IDENTICAL to the JVM
     broadcast-NLJ + interpreted-HOF reference tier on the frozen corpus
-    plus plants that force the NaN law (an empty doc -> zero vector ->
-    NaN cosine, which Spark counts as a hit and wins the max) — over
-    all three screen shapes (train-keyed, idf-weighted, eval-keyed)."""
+    plus an empty-doc plant (a zero vector; under the ANSI-off session
+    `x / 0.0` is NULL, so its cosine is NULL, not NaN) — over all three
+    screen shapes (train-keyed, idf-weighted, eval-keyed). The NaN law
+    is pinned by the `nan_elem` plants of tests/test_kernel_plants.py."""
     import shutil
 
     import pyspark.sql.functions as F
