@@ -10,26 +10,40 @@ to TimestampType by integer-dividing to microseconds — the same
 truncation DuckDB applies when it coerces ns→µs, so oracle comparisons
 see identical instants.
 
-A managed copy (ingest_managed) carries its Spark schema in a
-``<table>.parquet/_schema.json`` sidecar. load_table declares it
-instead of running a one-task parquet schema-inference job per load
-(Spark's file index skips ``_``-prefixed files, so the scan never sees
-it). A copy without the sidecar, e.g. one made by older code, is
-inferred once on its first load and the sidecar is written then (tmp
-file + atomic rename), so every later load takes the same path.
+A managed copy (ingest_managed) is written in one pass: the tables run
+concurrently, each as a single shuffle-free write job whose files hold
+contiguous runs of source-order rows, and each lands with its Spark
+schema in a ``<table>.parquet/_schema.json`` sidecar. load_table
+declares that schema instead of running a one-task parquet
+schema-inference job per load (Spark's file index skips ``_``-prefixed
+files, so the scan never sees it). A copy without the sidecar, made by
+older code, is inferred once on its first load and the sidecar is
+written then (tmp file + atomic rename), so every later load takes the
+same path.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
+import shutil
 import stat
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def _parquet_files(path: str) -> list[str]:
+    """The data files of a parquet table: the file at ``path``, or the
+    ``.parquet`` files directly under the directory at ``path``."""
+    if not os.path.isdir(path):
+        return [path]
+    return [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
 
 
 _SPLIT_BYTES = 128 * 1024 * 1024  # spark.sql.files.maxPartitionBytes default
@@ -50,20 +64,12 @@ def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     times splits-per-file exceeds core count and this is a no-op.
     """
     try:
-        if os.path.isdir(path):
-            files = [
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            ]
-            total = sum(os.path.getsize(f) for f in files)
-            # Each file yields at least one split.
-            est_splits = max(len(files), total // _SPLIT_BYTES)
-        else:
-            total = os.path.getsize(path)
-            est_splits = max(1, total // _SPLIT_BYTES)
+        files = _parquet_files(path)
+        total = sum(os.path.getsize(f) for f in files)
     except OSError:
         return df
+    # Each file yields at least one split.
+    est_splits = max(len(files), total // _SPLIT_BYTES)
     par = spark.sparkContext.defaultParallelism
     if est_splits >= par or total < _SPREAD_MIN_BYTES:
         return df
@@ -78,8 +84,9 @@ def _managed_dir(sf_dir: str) -> str:
 
 
 def ingest_managed(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the raw single-file tables as MANAGED multi-file
-    parquet (one ingest pass, idempotent via atomic rename).
+    """Materialize the raw tables as MANAGED multi-file parquet, each
+    with its ``_schema.json`` sidecar (one ingest pass, idempotent via
+    an atomic rename of the whole temp dir).
 
     The generator writes each table as ONE file with ONE row group — a
     layout no deployment would serve queries from, because a row group
@@ -87,9 +94,23 @@ def ingest_managed(spark: SparkSession, sf_dir: str) -> str:
     one task (the serial ~0.5-1s decode shows up in every query).
     Ingest-then-query-managed-storage is the normal engine contract
     (load → OPTIMIZE → query); load_table transparently prefers the
-    managed copy once it exists. Values are byte-identical — only file
-    count changes.
+    managed copy once it exists. Values are byte-identical — only the
+    file layout changes.
+
+    A table of ``rows`` rows (counted from its parquet footers, no job)
+    lands in ``n = max(1, min(par, rows // 2000))`` files of at most
+    ``ceil(rows / n)`` rows, written by ONE job with no shuffle: a
+    single-row-group raw file is one scan task that cuts its
+    source-order rows into n contiguous files; a multi-file (or
+    multi-group) one is coalesced to at most n tasks (at most 2n
+    files). The tables are independent, so they run side by side,
+    largest first (it is the long pole), in threads that inherit the
+    caller's job group. A failed write removes the temp dir and
+    re-raises.
     """
+    import pyarrow.dataset as ds
+    from pyspark.util import inheritable_thread_target
+
     from .schemas import TESTDATA_TABLES
 
     dst = _managed_dir(sf_dir)
@@ -97,17 +118,38 @@ def ingest_managed(spark: SparkSession, sf_dir: str) -> str:
         return dst
     tmp = dst + f".tmp{os.getpid()}"
     par = spark.sparkContext.defaultParallelism
-    for t in TESTDATA_TABLES:
+
+    def src(t: str) -> str:
+        return os.path.join(sf_dir, f"{t}.parquet")
+
+    def ingest(t: str) -> None:
+        meta = [f.metadata for f in ds.dataset(src(t), format="parquet").get_fragments()]
+        rows = sum(m.num_rows for m in meta)
+        n = max(1, min(par, rows // 2000))
+        # A row group is parquet's split unit: more tasks than row groups
+        # only adds empty ones, and task 0 writes a file even when empty.
+        tasks = max(1, min(n, sum(m.num_row_groups for m in meta)))
         raw = _load_raw(spark, sf_dir, t)
-        n = max(1, min(par, raw.count() // 2000))
-        raw.repartition(n).write.mode("overwrite").parquet(
-            os.path.join(tmp, f"{t}.parquet")
-        )
+        out = os.path.join(tmp, f"{t}.parquet")
+        raw.coalesce(tasks).write.option("maxRecordsPerFile", math.ceil(rows / n)).mode(
+            "overwrite"
+        ).parquet(out)
+        atomic_write(os.path.join(out, "_schema.json"), raw.schema.json())
+
+    tables = sorted(
+        TESTDATA_TABLES,
+        key=lambda t: sum(os.path.getsize(f) for f in _parquet_files(src(t))),
+        reverse=True,
+    )
+    try:
+        with ThreadPoolExecutor(min(par, len(tables))) as pool:
+            list(pool.map(inheritable_thread_target(spark)(ingest), tables))
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
     try:
         os.rename(tmp, dst)
     except OSError:  # concurrent ingest won the rename — use theirs
-        import shutil
-
         shutil.rmtree(tmp, ignore_errors=True)
     return dst
 
@@ -150,8 +192,9 @@ def read_schema(path: str) -> StructType | None:
 
 
 def _managed_schema(spark: SparkSession, managed: str) -> StructType:
-    """The managed copy's schema from its ``_schema.json`` sidecar;
-    inferred once (one parquet footer job) and stored if missing."""
+    """The managed copy's schema from the ``_schema.json`` sidecar that
+    ingest_managed writes; for a copy made by older code, inferred once
+    (one parquet footer job) and stored then."""
     path = os.path.join(managed, "_schema.json")
     schema = read_schema(path)
     if schema is None:

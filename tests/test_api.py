@@ -171,18 +171,23 @@ def test_snapshot_rebuilds_exactly_when_an_input_changes(spark, sf_dir, tmp_path
 
 def test_inputs_version_follows_the_managed_copy(spark, sf_dir, tmp_path, monkeypatch):
     """Once a managed copy exists the version stats its data files, as
-    load_table reads them; a first load writing the ``_schema.json``
-    sidecar is no change, a new data file is."""
+    load_table reads them. The ``_schema.json`` sidecar is no change:
+    not the one ingest writes, not a first load reading it, and not an
+    older copy's load that infers and rewrites it. A new data file is."""
     monkeypatch.setattr(eio, "_MANAGED_ROOT", str(tmp_path))
     raw = eio.inputs_version(sf_dir)
     root = eio.ingest_managed(spark, sf_dir)
     events = os.path.join(root, "events.parquet")
+    sidecar = os.path.join(events, "_schema.json")
     assert eio.table_path(sf_dir, "events") == events
     managed = eio.inputs_version(sf_dir)
     assert managed != raw
-    assert not os.path.exists(os.path.join(events, "_schema.json"))
+    assert os.path.isfile(sidecar)
     eio.load_table(spark, sf_dir, "events")
-    assert os.path.isfile(os.path.join(events, "_schema.json"))
+    assert eio.inputs_version(sf_dir) == managed
+    os.remove(sidecar)  # a copy made before ingest wrote sidecars
+    eio.load_table(spark, sf_dir, "events")
+    assert os.path.isfile(sidecar)
     assert eio.inputs_version(sf_dir) == managed
     part = next(f for f in sorted(os.listdir(events)) if f.endswith(".parquet"))
     shutil.copyfile(os.path.join(events, part), os.path.join(events, "part-extra.parquet"))

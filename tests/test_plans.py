@@ -6,9 +6,12 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from event_stream_starter_spark import io as eio
+from event_stream_starter_spark import schemas
 from event_stream_starter_spark.io import load_table
 from event_stream_starter_spark.plans import (
     LintViolation,
@@ -19,6 +22,7 @@ from event_stream_starter_spark.plans import (
     scan_cost_guard,
 )
 from event_stream_starter_spark.queries import all_queries
+from event_stream_starter_spark.schemas import TESTDATA_TABLES
 
 SPECS = all_queries()
 
@@ -33,33 +37,125 @@ def test_star_join_broadcasts_dims_and_prunes_columns(spark, sf_dir):
     assert li and li[0] == {"l_orderkey", "l_extendedprice", "l_discount"}
 
 
-def test_managed_load_declares_stored_schema_and_runs_no_job(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """A managed copy's load declares the schema stored in its
-    _schema.json sidecar: equal to parquet inference for every table,
-    invisible to the scan, and a load that finds it runs no Spark job."""
-    from event_stream_starter_spark import io as eio
-    from event_stream_starter_spark.schemas import TESTDATA_TABLES
+def _row_digest(df):
+    """(xxhash64 sum, count): equal for equal row multisets."""
+    r = df.select(
+        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")).alias("s"),
+        F.count(F.lit(1)).alias("n"),
+    ).first()
+    return r["s"], r["n"]
 
-    monkeypatch.setattr(eio, "_MANAGED_ROOT", str(tmp_path))
-    root = eio.ingest_managed(spark, sf_dir)
-    for t in TESTDATA_TABLES:
-        managed = os.path.join(root, f"{t}.parquet")
-        inferred = spark.read.parquet(managed).schema
-        assert load_table(spark, sf_dir, t).schema == inferred, t
-        assert os.path.isfile(os.path.join(managed, "_schema.json")), t
+
+def _data_files(managed):
+    return [f for f in os.listdir(managed) if f.endswith(".parquet")]
+
+
+def _jobs_in(spark, group, fn):
+    """Run ``fn()`` under job group ``group``; the ids of the jobs it started."""
     sc = spark.sparkContext
-    group = "managed-load-test"
-    sc.setJobGroup(group, "second load")
+    sc.setJobGroup(group, group)
     try:
-        docs = load_table(spark, sf_dir, "documents")
+        fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    managed_docs = spark.read.parquet(os.path.join(root, "documents.parquet"))
-    assert docs.count() == managed_docs.count() > 0
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_managed_load_declares_stored_schema_and_runs_no_job(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Every table of the managed copy follows the file-count law and
+    holds the raw table's rows. Its _schema.json sidecar, written at
+    ingest, equals parquet inference (nullability included) and is
+    invisible to the scan, so even a first load runs no Spark job. The
+    ingest's jobs, run in worker threads, carry the caller's job group."""
+    monkeypatch.setattr(eio, "_MANAGED_ROOT", str(tmp_path))
+    root = eio._managed_dir(sf_dir)
+    jobs = _jobs_in(spark, "managed-ingest", lambda: eio.ingest_managed(spark, sf_dir))
+    assert len(jobs) >= len(TESTDATA_TABLES)
+    assert os.listdir(tmp_path) == [os.path.basename(root)]
+    loads = {}
+    jobs = _jobs_in(
+        spark,
+        "managed-first-load",
+        lambda: loads.update((t, load_table(spark, sf_dir, t)) for t in TESTDATA_TABLES),
+    )
+    assert jobs == []
+    par = spark.sparkContext.defaultParallelism
+    for t in TESTDATA_TABLES:
+        managed = os.path.join(root, f"{t}.parquet")
+        raw = eio._load_raw(spark, sf_dir, t)
+        digest = _row_digest(raw)
+        assert len(_data_files(managed)) == max(1, min(par, digest[1] // 2000)), t
+        assert _row_digest(loads[t]) == digest, t
+        sidecar = eio.read_schema(os.path.join(managed, "_schema.json"))
+        assert loads[t].schema == sidecar == spark.read.parquet(managed).schema, t
+
+
+def _ingest_one(spark, monkeypatch, tmp_path, name, table):
+    """Ingest a one-table sf dir holding ``table`` as ``name``; written
+    as a directory of files when ``table`` is a list of tables."""
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    if isinstance(table, list):
+        (sf / f"{name}.parquet").mkdir()
+        for i, part in enumerate(table):
+            pq.write_table(part, str(sf / f"{name}.parquet" / f"part-{i:05d}.parquet"))
+    else:
+        pq.write_table(table, str(sf / f"{name}.parquet"))
+    monkeypatch.setattr(eio, "_MANAGED_ROOT", str(tmp_path / "managed"))
+    monkeypatch.setattr(schemas, "TESTDATA_TABLES", (name,))
+    root = eio.ingest_managed(spark, str(sf))
+    return str(sf), os.path.join(root, f"{name}.parquet")
+
+
+def test_ingest_managed_multi_file_raw_table(spark, sf_dir, tmp_path, monkeypatch):
+    """A raw table stored as a directory of files (the sf1 shape) is
+    coalesced without a shuffle: at most 2n files, the same rows."""
+    li = pq.read_table(os.path.join(sf_dir, "lineitem.parquet"))
+    cuts = [0, li.num_rows // 6, li.num_rows // 2, li.num_rows]
+    parts = [li.slice(a, b - a) for a, b in zip(cuts, cuts[1:])]
+    sf, managed = _ingest_one(spark, monkeypatch, tmp_path, "lineitem", parts)
+    n = max(1, min(spark.sparkContext.defaultParallelism, li.num_rows // 2000))
+    assert n > 1
+    assert 1 <= len(_data_files(managed)) <= 2 * n
+    assert _row_digest(load_table(spark, sf, "lineitem")) == _row_digest(
+        eio._load_raw(spark, sf, "lineitem")
+    )
+
+
+def test_ingest_managed_empty_raw_table(spark, sf_dir, tmp_path, monkeypatch):
+    """An empty raw table lands as one readable file and a sidecar."""
+    region = pq.read_table(os.path.join(sf_dir, "region.parquet")).slice(0, 0)
+    sf, managed = _ingest_one(spark, monkeypatch, tmp_path, "region", region)
+    assert len(_data_files(managed)) == 1
+    assert spark.read.parquet(managed).count() == 0
+    assert eio.read_schema(os.path.join(managed, "_schema.json")) == (
+        eio._load_raw(spark, sf, "region").schema
+    )
+    assert load_table(spark, sf, "region").count() == 0
+
+
+def test_failed_ingest_leaves_no_temp_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """A table write that raises removes the whole temp dir and
+    re-raises; the next ingest then succeeds."""
+    monkeypatch.setattr(eio, "_MANAGED_ROOT", str(tmp_path))
+    load_raw = eio._load_raw
+
+    def failing(spark, sf, name):
+        if name == "orders":
+            raise RuntimeError("orders unreadable")
+        return load_raw(spark, sf, name)
+
+    monkeypatch.setattr(eio, "_load_raw", failing)
+    with pytest.raises(RuntimeError, match="orders unreadable"):
+        eio.ingest_managed(spark, sf_dir)
+    assert os.listdir(tmp_path) == []
+    monkeypatch.setattr(eio, "_load_raw", load_raw)
+    root = eio.ingest_managed(spark, sf_dir)
+    assert os.listdir(tmp_path) == [os.path.basename(root)]
+    assert os.path.isfile(os.path.join(root, "orders.parquet", "_schema.json"))
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):

@@ -191,6 +191,46 @@ def test_metrics_listener_collects_progress(spark, landing, tmp_path):
         spark.streams.removeListener(listener)
 
 
+def test_rate_stream_is_shaped_like_events_and_follows_its_value_law(
+    spark, sf_dir, tmp_path
+):
+    """The synthetic rate source has the events table's dtypes; a short
+    processingTime run commits rows derived from the rate counter:
+    user_id = n % 50, event_type cycling over the 5 names, value and
+    props from n % 100."""
+    import time
+
+    from event_stream_starter_spark.io import load_table
+    from event_stream_starter_spark.streaming.source import rate_stream
+
+    stream = rate_stream(spark, rows_per_second=20)
+    assert stream.dtypes == load_table(spark, sf_dir, "events").dtypes
+    q = (
+        stream.writeStream.format("memory")
+        .queryName("rate_tbl")
+        .option("checkpointLocation", str(tmp_path / "ck_rate"))
+        .trigger(processingTime="500 milliseconds")
+        .start()
+    )
+    try:
+        deadline = time.monotonic() + 60
+        while spark.table("rate_tbl").count() < 10 and time.monotonic() < deadline:
+            time.sleep(0.5)
+    finally:
+        q.stop()
+    rows = sorted(spark.table("rate_tbl").collect(), key=lambda r: r.event_id)
+    assert len(rows) >= 10
+    assert [r.event_id for r in rows] == list(range(len(rows)))
+    names = ("click", "view", "purchase", "error", "signup")
+    for r in rows:
+        n = r.event_id
+        assert r.ts is not None
+        assert r.user_id == n % 50
+        assert r.event_type == names[n % 5]
+        assert r.value == float(n % 100)
+        assert r.props == f'{{"k": {n % 100}}}'
+
+
 def test_ema_stream_matches_batch_fold(spark, sf_dir, tmp_path):
     """Ordered landing (one ts-range file per batch) → streamed EMA must
     equal the batch fold over the ts-ordered series."""
