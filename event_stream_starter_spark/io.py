@@ -12,8 +12,10 @@ see identical instants.
 
 A managed copy (ingest_managed) is written in one pass: the tables run
 concurrently, each as a single shuffle-free write job whose files hold
-contiguous runs of source-order rows, and each lands with its Spark
-schema in a ``<table>.parquet/_schema.json`` sidecar. load_table
+contiguous runs of source-order rows (one file per core for a table of
+at least ``_SPREAD_MIN_BYTES``, so its reads need no round-robin
+shuffle), and each lands with its Spark schema in a
+``<table>.parquet/_schema.json`` sidecar. load_table
 declares that schema instead of running a one-task parquet
 schema-inference job per load (Spark's file index skips ``_``-prefixed
 files, so the scan never sees it). A copy without the sidecar, made by
@@ -98,8 +100,13 @@ def ingest_managed(spark: SparkSession, sf_dir: str) -> str:
     file layout changes.
 
     A table of ``rows`` rows (counted from its parquet footers, no job)
-    lands in ``n = max(1, min(par, rows // 2000))`` files of at most
-    ``ceil(rows / n)`` rows, written by ONE job with no shuffle: a
+    lands in ``n`` files of at most ``ceil(rows / n)`` rows: ``n =
+    min(par, rows)`` when its raw files hold at least
+    ``_SPREAD_MIN_BYTES``, so a managed read yields ``par`` splits and
+    load_table's ``_spread`` adds no round-robin shuffle in front of it
+    (a compute-dense table such as documents or embeddings is few rows
+    but needs every core), else ``max(1, min(par, rows // 2000))``.
+    It is written by ONE job with no shuffle: a
     single-row-group raw file is one scan task that cuts its
     source-order rows into n contiguous files; a multi-file (or
     multi-group) one is coalesced to at most n tasks (at most 2n
@@ -122,10 +129,12 @@ def ingest_managed(spark: SparkSession, sf_dir: str) -> str:
     def src(t: str) -> str:
         return os.path.join(sf_dir, f"{t}.parquet")
 
+    size = {t: sum(os.path.getsize(f) for f in _parquet_files(src(t))) for t in TESTDATA_TABLES}
+
     def ingest(t: str) -> None:
         meta = [f.metadata for f in ds.dataset(src(t), format="parquet").get_fragments()]
         rows = sum(m.num_rows for m in meta)
-        n = max(1, min(par, rows // 2000))
+        n = max(1, min(par, rows if size[t] >= _SPREAD_MIN_BYTES else rows // 2000))
         # A row group is parquet's split unit: more tasks than row groups
         # only adds empty ones, and task 0 writes a file even when empty.
         tasks = max(1, min(n, sum(m.num_row_groups for m in meta)))
@@ -136,11 +145,7 @@ def ingest_managed(spark: SparkSession, sf_dir: str) -> str:
         ).parquet(out)
         atomic_write(os.path.join(out, "_schema.json"), raw.schema.json())
 
-    tables = sorted(
-        TESTDATA_TABLES,
-        key=lambda t: sum(os.path.getsize(f) for f in _parquet_files(src(t))),
-        reverse=True,
-    )
+    tables = sorted(TESTDATA_TABLES, key=size.get, reverse=True)
     try:
         with ThreadPoolExecutor(min(par, len(tables))) as pool:
             list(pool.map(inheritable_thread_target(spark)(ingest), tables))
@@ -213,11 +218,11 @@ def table_path(sf_dir: str, name: str) -> str:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = table_path(sf_dir, name)
     if os.path.dirname(path) == _managed_dir(sf_dir):
-        # Managed copy is already normalized (types + multi-file layout);
-        # still apply the scan-parallelism floor — a small compute-dense
-        # table (embeddings, documents) can land in 1-2 files whose
-        # downstream per-row work needs all cores (measured 8x on the
-        # embedding self-join when read as a single split).
+        # Managed copy is already normalized (types + multi-file layout).
+        # Ingest gives every table of at least _SPREAD_MIN_BYTES one file
+        # per core, so the floor is a no-op on it; it still spreads a
+        # copy with fewer files (a compute-dense table read as a single
+        # split measured 8x slower on the embedding self-join).
         schema = _managed_schema(spark, path)
         return _spread(spark, spark.read.schema(schema).parquet(path), path)
     return _spread(spark, _load_raw(spark, sf_dir, name), path)

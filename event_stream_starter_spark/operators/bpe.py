@@ -27,16 +27,19 @@ The classic scale decomposition makes this tractable:
 
 Encoding is two-tier, like C2 URL normalization
 (functions/normalize.py): a pure-Column fold path for bounded merge
-lists (oracle-certifiable, whole-stage codegen) and an Arrow-batched
-pandas-UDF path for production vocab sizes (32k merges would blow up
-codegen; the UDF applies the same scan in rank order so the two paths
-are value-identical — certified in-plan by x_bpe_encode_cert).
+lists (oracle-certifiable, whole-stage codegen) and a columnar Arrow
+UDF path for production vocab sizes (32k merges would blow up codegen;
+the UDF applies the same scan in rank order so the two paths are
+value-identical — certified in-plan by x_bpe_encode_cert).
 """
 
 from __future__ import annotations
 
 import re
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -309,9 +312,10 @@ def _encode_word_py(word: str, merges: list[tuple[str, str]]) -> list[str]:
 
 
 def encode_text_py(text: str, merges: list[tuple[str, str]]) -> list[str]:
-    """Pure-Python row encoder — the UDF kernel AND the golden-test
-    reference. Same scan as merge_pair/encode_word_expr by
-    construction; x_bpe_encode_cert proves the agreement in-plan.
+    """Pure-Python row encoder — the golden-test reference for the
+    Arrow kernel (:func:`encode_batch`). Same scan as
+    merge_pair/encode_word_expr by construction; x_bpe_encode_cert
+    proves the agreement in-plan.
     Splits on the Java-regex ASCII \\s class (the textan.tokens law),
     not Python's Unicode whitespace — \\xa0/NEL stay inside words."""
     pieces: list[str] = []
@@ -321,39 +325,52 @@ def encode_text_py(text: str, merges: list[tuple[str, str]]) -> list[str]:
     return pieces
 
 
-def bpe_encode_udf(merges: list[tuple[str, str]]):
-    """Arrow-batched pandas UDF encoder for production merge lists.
-    Per-row Python inside an Arrow batch (the normalize_url_full
-    tier-2 pattern, functions/normalize.py), with the merge scan run
-    once per DISTINCT word of the batch: a word's pieces depend only on
-    the word, so a per-call ``word -> pieces`` dict (memory bounded by
-    one batch's distinct words) serves every repeat. Text is Zipfian,
-    so most word tokens are repeats (sf0.1 documents: 270,704 tokens,
-    31 distinct words); a miss costs the scan plus one dict probe.
-    Splits and lower-cases exactly as :func:`encode_text_py`, which
-    stays the per-token reference the tests compare this tier against.
-    At 32k merges a real deployment would swap the kernel for a
-    compiled tokenizer via the same seam; the signature and batch
-    shape are what matter here."""
-    import pandas as pd  # noqa: F401  (pandas_udf requires pandas present)
-    from pyspark.sql.functions import pandas_udf
+def encode_batch(texts: pa.Array, merges: list[tuple[str, str]]) -> pa.ListArray:
+    """Arrow batch encoder: a string array -> the list array of each
+    row's BPE pieces, row for row equal to :func:`encode_text_py` (a
+    NULL text gives a NULL row).
 
+    Columnar apart from one Python scan per DISTINCT word: Arrow splits
+    every text on the ASCII whitespace class and drops the empty words;
+    ``dictionary_encode`` maps each word token to its distinct word;
+    each distinct word is lower-cased (Python's ``str.lower``, so the
+    final-sigma and dotted-I rules match the reference; lower-casing
+    never makes or removes ASCII whitespace, so word by word equals
+    ``text.lower()`` split) and run through the merge scan once; the
+    output is gathered from those pieces through the token offsets.
+    Text is Zipfian (sf0.1 documents: 270,704 tokens, 31 distinct
+    words), so the scan is paid for a handful of words per batch."""
+    words = pc.split_pattern_regex(texts, _ASCII_WS.pattern)
+    tokens = words.flatten()
+    keep = pc.not_equal(tokens, "")
+    row_of = pc.list_parent_indices(words).filter(keep).to_numpy()
+    codes = tokens.filter(keep).dictionary_encode()
+    enc = [_encode_word_py(w.lower(), merges) for w in codes.dictionary.to_pylist()]
+    width = np.array([len(p) for p in enc], dtype=np.int64)
+    start = np.concatenate(([0], np.cumsum(width)))
+    idx = codes.indices.to_numpy(zero_copy_only=False)
+    # Gather: token t contributes pieces start[idx[t]] .. + width[idx[t]].
+    cnt = width[idx]
+    first = np.repeat(start[idx] - (np.cumsum(cnt) - cnt), cnt)
+    take = first + np.arange(cnt.sum())
+    values = pa.array([p for ps in enc for p in ps], pa.string()).take(pa.array(take))
+    n_pieces = np.bincount(row_of, weights=cnt, minlength=len(texts)).astype(np.int64)
+    offsets = np.concatenate(([0], np.cumsum(n_pieces))).astype(np.int32)
+    return pa.ListArray.from_arrays(pa.array(offsets), values, mask=texts.is_null())
+
+
+def bpe_encode_udf(merges: list[tuple[str, str]]):
+    """Arrow UDF encoder for production merge lists: :func:`encode_batch`
+    over each Arrow batch, reading Spark's string arrays directly (no
+    pandas conversion, no per-row Python). :func:`encode_text_py` stays
+    the per-token reference the tests compare this tier against. At 32k
+    merges a real deployment would swap the per-word scan for a
+    compiled tokenizer via the same seam; the signature and batch shape
+    are what matter here."""
     frozen = [tuple(m) for m in merges]
 
-    @pandas_udf("array<string>")
+    @F.arrow_udf("array<string>")
     def _encode(texts):  # type: ignore[no-untyped-def]
-        memo: dict[str, list[str]] = {}
-
-        def encode(text: str) -> list[str]:
-            pieces: list[str] = []
-            for w in _ASCII_WS.split(text.lower()):
-                if w:
-                    hit = memo.get(w)
-                    if hit is None:
-                        hit = memo[w] = _encode_word_py(w, frozen)
-                    pieces.extend(hit)
-            return pieces
-
-        return texts.map(lambda t: encode(t) if isinstance(t, str) else None)
+        return encode_batch(texts, frozen)
 
     return _encode

@@ -243,8 +243,9 @@ def _frozen_pieces(docs: DataFrame, kernel: str = "udf") -> DataFrame:
 
     - ``"fold"``: the pure-Column fold (12 chained codegen array folds
       per word) — the zero-Python tier x_bpe_encode_frozen registers.
-    - ``"udf"``: the Arrow-batched pandas-UDF tier (bpe_encode_udf) —
-      measured 4.3x faster at sf0.1 (0.63s vs 2.74s, guide §4.2: one
+    - ``"udf"``: the columnar Arrow UDF tier (bpe_encode_udf) —
+      measured 4.3x faster at sf0.1 already as a pandas UDF (0.63s
+      vs 2.74s, guide §4.2: one
       native batch kernel beats a deep JVM expression tree), and the
       documented production-vocab swap, so the downstream consumers
       (export slice, manifest, fertility rollups, coverage) default to
@@ -341,7 +342,7 @@ def x_bpe_encode_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x_bpe_encode_frozen_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x_bpe_encode_frozen with the encoding kernel swapped to the
-    Arrow-batched pandas_udf tier (bpe_encode_udf over _FROZEN_MERGES)
+    columnar Arrow UDF tier (bpe_encode_udf over _FROZEN_MERGES)
     — the seam a 32k-merge production vocabulary uses, where 32k
     chained codegen folds stop being viable. Output and oracle are
     IDENTICAL to the fold tier (both implement the same merge law;
@@ -349,10 +350,10 @@ def x_bpe_encode_frozen_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     adversarial reference), so the driver hash-checks this tier
     end-to-end too. Registered to price the tier: map-only Arrow
     exchange, zero shuffle — the VERDICT r6 task-7 bench row. The
-    kernel runs the merge scan once per distinct word of each Arrow
-    batch (bpe_encode_udf's memo), so the price is the Arrow round trip
-    plus a dict probe per word token: 270,704 sf0.1 tokens are only 31
-    distinct words.
+    kernel splits and dictionary-encodes each Arrow batch in Arrow and
+    runs the merge scan once per distinct word (bpe.encode_batch), so
+    the price is the Arrow round trip plus a gather: 270,704 sf0.1
+    tokens are only 31 distinct words.
     """
     docs = load_table(spark, sf_dir, "documents")
     clean = F.translate(F.col("text"), _SEP, "")

@@ -29,13 +29,18 @@ values. Scaling law per table (all 10x rows, FK-preserving):
   row count is 10x. Other attributes copied verbatim.
 - region/nation: dimension tables, copied as-is.
 
+Fact and entity tables land as 32 files each; the dimension tables
+(nation, region, supplier) as one file each, since 32-way writes of 25
+or 5 rows give one-row and empty files that every raw scan must open.
+
 Usage: python scripts/gen_sf1.py [outdir=/root/sf1]
 Then: SPARK_GRAFT_SF_DIR=/root/sf1 python scripts/probe_queries.py ...
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -53,10 +58,9 @@ def main() -> None:
     def src(name):
         return spark.read.parquet(f"{SRC}/{name}.parquet")
 
-    def write(df, name):
-        df.repartition(32).write.mode("overwrite").parquet(
-            f"{OUT}/{name}.parquet"
-        )
+    def write(df, name, files=32):
+        df = df.coalesce(1) if files == 1 else df.repartition(files)
+        df.write.mode("overwrite").parquet(f"{OUT}/{name}.parquet")
         n = spark.read.parquet(f"{OUT}/{name}.parquet").count()
         print(f"{name}: {n} rows")
 
@@ -201,6 +205,7 @@ def main() -> None:
             "s_acctbal",
         ),
         "supplier",
+        files=1,
     )
 
     li = src("lineitem").select(
@@ -235,7 +240,7 @@ def main() -> None:
     )
 
     for name in ("region", "nation"):
-        write(src(name), name)
+        write(src(name), name, files=1)
 
     print(f"sf1 written to {OUT}")
 

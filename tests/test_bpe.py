@@ -129,9 +129,15 @@ _EDGE_TEXTS = [
     "héllo",
     "x " * 50,
     "ab ab ab abab",
-    "Ab ab AB ab",  # one word, three casings: memo hits after lower()
+    "Ab ab AB ab",  # three raw words, one word after lower()
     "ha\xa0ab ab",  # \xa0 is not a split char: 'ha\xa0ab' is one word
-    "quick brown fox jumps",  # every word distinct: memo misses only
+    "quick brown fox jumps",  # every word distinct
+    # Lower-casing each distinct word must equal text.lower(): a final
+    # sigma lowers to ς only at a word end; İ lowers to two codepoints.
+    "ΟΔΟΣ ΟΔΟΣ",
+    "İstanbul",
+    "a\t\tb\n\n\nab\t \nab",  # tab/newline runs
+    "  \tab ha  ",  # leading and trailing whitespace
     None,
 ]
 
@@ -139,7 +145,7 @@ _EDGE_TEXTS = [
 @pytest.fixture(scope="module")
 def edge_encodings(spark):
     """Both encoder tiers over every edge text, as ONE DataFrame in one
-    partition, so the UDF's per-batch word memo sees words repeat
+    partition, so the UDF's per-batch word dictionary sees words repeat
     across rows of a single Arrow batch."""
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(_EDGE_TEXTS)], "i int, text string"
@@ -156,6 +162,40 @@ def edge_encodings(spark):
 def test_encode_edge_cases_expr_matches_python(edge_encodings, text):
     want = None if text is None else bpe.encode_text_py(text, _EDGE_MERGES)
     assert edge_encodings[text] == (want, want)
+
+
+@pytest.mark.parametrize(
+    "texts", [[None, None, None], ["", "   ", "\t\n"]], ids=["all_null", "zero_words"]
+)
+def test_encode_batch_without_words(spark, texts):
+    """A batch with no word at all: NULL rows stay NULL and wordless
+    rows get empty piece lists, in the kernel and through Spark."""
+    import pyarrow as pa
+
+    want = [None if t is None else [] for t in texts]
+    assert bpe.encode_batch(pa.array(texts, pa.string()), _EDGE_MERGES).to_pylist() == want
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, text string")
+    rows = df.coalesce(1).select("i", bpe.bpe_encode_udf(_EDGE_MERGES)("text").alias("u"))
+    assert [r["u"] for r in rows.orderBy("i").collect()] == want
+
+
+def test_encode_udf_across_batches_of_one_partition(spark):
+    """Three-row Arrow batches: each batch encodes on its own, and the
+    concatenated rows still equal the reference row for row."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        df = spark.createDataFrame(
+            [(i, t) for i, t in enumerate(_EDGE_TEXTS)], "i int, text string"
+        ).coalesce(1)
+        rows = df.select("i", bpe.bpe_encode_udf(_EDGE_MERGES)("text").alias("u")).collect()
+    finally:
+        spark.conf.set(key, old)
+    assert len(rows) == len(_EDGE_TEXTS)
+    for r in rows:
+        t = _EDGE_TEXTS[r["i"]]
+        assert r["u"] == (None if t is None else bpe.encode_text_py(t, _EDGE_MERGES)), t
 
 
 def test_merged_symbol_never_remerges_as_left_within_round(spark):

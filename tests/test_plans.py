@@ -50,6 +50,14 @@ def _data_files(managed):
     return [f for f in os.listdir(managed) if f.endswith(".parquet")]
 
 
+def _file_law(par, rows, raw_path):
+    """The managed copy's file count: one per core (at most one per row)
+    for a raw table of at least _SPREAD_MIN_BYTES, else one per 2000
+    rows, capped at the core count."""
+    size = sum(os.path.getsize(f) for f in eio._parquet_files(raw_path))
+    return max(1, min(par, rows if size >= eio._SPREAD_MIN_BYTES else rows // 2000))
+
+
 def _jobs_in(spark, group, fn):
     """Run ``fn()`` under job group ``group``; the ids of the jobs it started."""
     sc = spark.sparkContext
@@ -87,7 +95,8 @@ def test_managed_load_declares_stored_schema_and_runs_no_job(
         managed = os.path.join(root, f"{t}.parquet")
         raw = eio._load_raw(spark, sf_dir, t)
         digest = _row_digest(raw)
-        assert len(_data_files(managed)) == max(1, min(par, digest[1] // 2000)), t
+        raw_path = os.path.join(sf_dir, f"{t}.parquet")
+        assert len(_data_files(managed)) == _file_law(par, digest[1], raw_path), t
         assert _row_digest(loads[t]) == digest, t
         sidecar = eio.read_schema(os.path.join(managed, "_schema.json"))
         assert loads[t].schema == sidecar == spark.read.parquet(managed).schema, t
@@ -117,12 +126,33 @@ def test_ingest_managed_multi_file_raw_table(spark, sf_dir, tmp_path, monkeypatc
     cuts = [0, li.num_rows // 6, li.num_rows // 2, li.num_rows]
     parts = [li.slice(a, b - a) for a, b in zip(cuts, cuts[1:])]
     sf, managed = _ingest_one(spark, monkeypatch, tmp_path, "lineitem", parts)
-    n = max(1, min(spark.sparkContext.defaultParallelism, li.num_rows // 2000))
+    n = _file_law(spark.sparkContext.defaultParallelism, li.num_rows, f"{sf}/lineitem.parquet")
     assert n > 1
     assert 1 <= len(_data_files(managed)) <= 2 * n
     assert _row_digest(load_table(spark, sf, "lineitem")) == _row_digest(
         eio._load_raw(spark, sf, "lineitem")
     )
+
+
+def test_managed_read_of_a_large_table_adds_no_round_robin_shuffle(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A single-file raw table of at least _SPREAD_MIN_BYTES is one scan
+    split, so its raw read is spread by a RoundRobinPartitioning
+    exchange; its managed copy holds one file per core, so a managed
+    read scans in parallel with no exchange in front of it."""
+    emb = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+    sf, managed = _ingest_one(spark, monkeypatch, tmp_path, "embeddings", emb)
+    raw_path = os.path.join(sf, "embeddings.parquet")
+    assert os.path.getsize(raw_path) >= eio._SPREAD_MIN_BYTES
+    assert len(_data_files(managed)) == spark.sparkContext.defaultParallelism
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    raw = eio._spread(spark, eio._load_raw(spark, sf, "embeddings"), raw_path)
+    assert "RoundRobinPartitioning" in plan(raw)
+    assert "RoundRobinPartitioning" not in plan(load_table(spark, sf, "embeddings"))
 
 
 def test_ingest_managed_empty_raw_table(spark, sf_dir, tmp_path, monkeypatch):
