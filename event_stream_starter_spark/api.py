@@ -59,8 +59,11 @@ def register_catalog(
     Cost note: most query views are lazy (plan construction only), but
     the near-dup/clustering family (``dd_minhash_lsh``,
     ``dd_cluster_canonical``, ``e2e_corpus_prep``, ...) materializes
-    work at CONSTRUCTION time — signature/shingle frames are eagerly
-    cached and connected components iterates — and those caches stay
+    work at CONSTRUCTION time — signature/shingle frames and the pair
+    set are eagerly cached (``io.reuse``) and connected components
+    iterates. Those caches are exact: each is keyed by the version of
+    the files it reads and rebuilt when one of them changes, so a view
+    over rewritten inputs never answers from stale ones. They stay
     resident until ``spark.catalog.clearCache()``. Register the subset
     you need via ``queries`` on an interactive session.
     """

@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..io import reuse
+
 
 def exact_dedup(
     df: DataFrame, keys: Sequence[str], order_col: str, tiebreak: Sequence[str] = ()
@@ -103,35 +105,28 @@ def jaccard_prefix_join(
     Input shingles must be array<long> (pre-hashed). Output:
     (id_a, id_b, jaccard_sim double, *block_cols) with id_a < id_b.
 
-    Cache lifetime: `base` (the sorted-shingle map) is persisted here
-    because it feeds four concurrent attach points of one job, and the
-    CALLER owns its release — the returned frame is lazy, so this
-    function cannot know when the last downstream materialization
-    happens. Unpersist by plan identity
-    (`spark.catalog.clearCache()` or re-persist/unpersist of the same
-    logical plan) once the pairs are materialized; same contract as
-    incremental_minhash_pairs. Repeat invocations with identical
-    inputs re-hit the one cached plan (CacheManager matches on the
-    analyzed plan), so the steady-state footprint is one shingle map
-    per distinct corpus, not per call.
+    Cache lifetime: `base` (the sorted-shingle map) feeds four
+    concurrent attach points of one job, so it is filled before the
+    fan-out through io.reuse: once per version of the files it reads.
+    A repeat call over unchanged files reuses it and runs no job for it;
+    a rewritten, added or removed input file rebuilds it, so the pairs
+    are never computed from stale shingles. It stays cached for the
+    session (one shingle map per distinct input) until
+    `spark.catalog.clearCache()`, after which the next call refills it.
     """
     par = df.sparkSession.sparkContext.defaultParallelism
     blocks = [F.col(c) for c in block_cols]
-    base = (
+    # Filled eagerly: base feeds BOTH posting sides and both verify
+    # attaches — independent stages of one job that launch concurrently,
+    # and concurrent stages each recompute a not-yet-cached partition
+    # (upstream here is the whole shingle map).
+    base = reuse(
         df.select(
             *block_cols,
             F.col(id_col).alias("__id"),
             F.array_sort(F.col(shingles_col)).alias("__sh"),
-        )
-        .withColumn("__n", F.size("__sh"))
-        .persist()
+        ).withColumn("__n", F.size("__sh"))
     )
-    # Eager: base feeds BOTH posting sides and both verify attaches —
-    # independent stages of one job that launch concurrently, and
-    # concurrent stages each recompute a not-yet-cached partition
-    # (upstream here is the whole shingle map). Populate the cache with
-    # one cheap job before the fan-out schedules.
-    base.count()
     # Prefix length |A| - ceil(t*|A|) + 1 over ascending hash order.
     prefix_len = F.col("__n") - F.ceil(F.lit(threshold) * F.col("__n")) + 1
     postings = base.select(
@@ -210,13 +205,13 @@ def containment_prefix_join(
     directions. Same verify shape as jaccard_prefix_join: candidates
     repartitioned by pair before the O(|A|+|B|) intersect.
 
-    Cache lifetime: as in jaccard_prefix_join, `base` is persisted for
-    the multi-attach fan-out and the CALLER owns its release (the
-    returned frame is lazy); identical re-invocations share the one
-    cached plan via CacheManager plan-identity matching.
+    Cache lifetime: as in jaccard_prefix_join, `base` feeds the
+    multi-attach fan-out and is filled through io.reuse, once per
+    version of its input files: a repeat call over unchanged files
+    reuses it, a changed input file rebuilds it.
     """
     par = df.sparkSession.sparkContext.defaultParallelism
-    base = (
+    base = reuse(  # filled before the fan-out (see jaccard_prefix_join)
         df.select(
             *block_cols,
             F.col(id_col).alias("__id"),
@@ -224,9 +219,7 @@ def containment_prefix_join(
         )
         .withColumn("__n", F.size("__sh"))
         .filter(F.col("__n") > 0)
-        .persist()
     )
-    base.count()  # populate before the fan-out (see jaccard_prefix_join)
     a_req = F.ceil(F.lit(threshold) * F.col("__n")).cast("int")
     probe = base.select(
         *block_cols,
@@ -374,10 +367,10 @@ def minhash_lsh_pairs(
     # stages of one job and launch concurrently, and concurrent stages
     # hitting a not-yet-cached partition each recompute it — measured
     # up to 5 simultaneous runs of the signature map (ruinous once the
-    # map is an Arrow/Python stage: 81s vs 30s at 50k docs). One
-    # count() populates the cache before the fan-out ever schedules.
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n).persist()
-    sig.count()
+    # map is an Arrow/Python stage: 81s vs 30s at 50k docs). io.reuse
+    # fills the cache before the fan-out ever schedules, once per
+    # version of the input files.
+    sig = reuse(minhash_signatures(df, id_col, text_col, num_hashes, shingle_n))
     # Candidate generation carries ONLY (id, band-key): the wide shingle
     # arrays never enter the shuffle, and grouping by bucket computes the
     # signature ONCE (a band-key self-join would evaluate the whole
@@ -762,16 +755,12 @@ def simhash_pairs(
     toks = F.split(F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " ")
     par = df.sparkSession.sparkContext.defaultParallelism
     # CPU-bound map stage: spread across cores even from one parquet
-    # split; the (id, simhash) frame is tiny — persist it so the hash is
-    # computed once across banding and verification.
-    base = (
-        df.repartition(par)
-        .select(F.col(id_col).alias("id"), simhash64(toks).alias("sh"))
-        .persist()
+    # split; the (id, simhash) frame is tiny — reuse it so the hash is
+    # computed once across banding and verification, filled before the
+    # fan-out (see minhash_lsh_pairs note on concurrent-stage recompute).
+    base = reuse(
+        df.repartition(par).select(F.col(id_col).alias("id"), simhash64(toks).alias("sh"))
     )
-    # Eager cache fill before the banding/verify fan-out (see
-    # minhash_lsh_pairs note on concurrent-stage recompute).
-    base.count()
     width = 64 // bands
     block_keys = F.array(
         *[
