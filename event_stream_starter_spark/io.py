@@ -23,10 +23,19 @@ older code, is inferred once on its first load and the sidecar is
 written then (tmp file + atomic rename), so every later load takes the
 same path.
 
-reuse(df) is the session's cache of derived frames: the near-dup
-operators' shingle and signature maps and the connected-components pair
-set are filled once per version of the files they read, and rebuilt
-when one of those files changes.
+Every engine cache that depends on input files keeps one version law:
+an entry is valid for the ``(path, inode, mtime_ns, size)`` of every
+data file it read (_stat_tree), read before it was built. A rewritten,
+added or removed file is a miss, so no answer comes from stale inputs,
+and a call over unchanged files costs only the stat. Three caches keep
+it, each keeping one entry per key, with no TTL and no size cap:
+
+- reuse(df), the session's derived frames: the near-dup operators'
+  shingle and signature maps and the connected-components pair set;
+- memo(key, paths, build), Python values built from input files: the
+  fitted tokenizer, classifier and quantizer models and the compiled
+  rule configs;
+- the ReadApi endpoint snapshots (api.py), keyed by inputs_version.
 """
 
 from __future__ import annotations
@@ -352,6 +361,23 @@ def reuse(df: DataFrame) -> DataFrame:
         if paths is not None:
             entries.append(_Reused(df, key, paths, version))
     return df
+
+
+_memos: dict = {}  # key -> (version, value)
+
+
+def memo(key, paths: list[str], build):
+    """``build()``, kept under ``key`` until the version of the files at
+    ``paths`` changes. The version is read before the build, so a file
+    rewritten during one is a miss on the next call. No lock: concurrent
+    misses build twice and keep an equal value."""
+    version = _files_version(paths)
+    got = _memos.get(key)
+    if got is not None and got[0] == version:
+        return got[1]
+    value = build()
+    _memos[key] = (version, value)
+    return value
 
 
 def inputs_version(sf_dir: str) -> tuple:

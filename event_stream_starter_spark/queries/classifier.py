@@ -29,7 +29,7 @@ from decimal import Decimal
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import load_table, memo, table_path
 from ..operators import certs, lr
 from . import query
 from .textdata import _quality_duck
@@ -37,18 +37,16 @@ from .textdata import _quality_duck
 _ITERS = 16
 _LR = "1"
 
-# One train per (process, sf_dir), reused by every consumer below — the
-# tokenizer-module memo pattern; sf_dir test data is immutable.
-_MODEL_CACHE: dict[str, tuple[dict[str, Decimal], Decimal]] = {}
-
 
 def _trained(spark: SparkSession, sf_dir: str) -> tuple[dict[str, Decimal], Decimal]:
-    got = _MODEL_CACHE.get(sf_dir)
-    if got is None:
+    """One train per version of the documents files, reused by every
+    consumer below."""
+
+    def build():
         docs = load_table(spark, sf_dir, "documents")
-        got = lr.train_logreg(docs, iters=_ITERS, lr=_LR)
-        _MODEL_CACHE[sf_dir] = got
-    return got
+        return lr.train_logreg(docs, iters=_ITERS, lr=_LR)
+
+    return memo(("lr_quality", sf_dir), [table_path(sf_dir, "documents")], build)
 
 
 @query(

@@ -11,12 +11,11 @@ semantics are exercised.
 
 from __future__ import annotations
 
-import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..io import load_table
+from ..io import load_table, memo
 from ..rules.compiler import load_ruleset
 from ..rules.onchain import load_onchain_rules, risk_label_sql
 from . import query
@@ -49,31 +48,25 @@ def _projection_sql(k: str) -> list[str]:
 
 
 def _load_rules():
-    """Compile rules.yml once per (mtime, size): re-reading and
-    re-compiling the YAML on every build of a query is pure driver
-    overhead. The mtime key keeps the hot-reload contract: an edited file
-    recompiles on next use (and changes io.inputs_version, so a ReadApi
-    snapshot built from the old rules is rebuilt)."""
-    st = os.stat(RULES_YML)
-    return _load_rules_cached(st.st_mtime_ns, st.st_size)
-
-
-@functools.lru_cache(maxsize=4)
-def _load_rules_cached(mtime_ns: int, size: int):
-    return load_ruleset(RULES_YML, env={})
+    """Compile rules.yml once per version of the file (io.memo):
+    re-reading and re-compiling the YAML on every build of a query is
+    pure driver overhead. The version keeps the hot-reload contract: an
+    edited file recompiles on next use (and changes io.inputs_version, so
+    a ReadApi snapshot built from the old rules is rebuilt)."""
+    path = RULES_YML
+    return memo("rules_yml", [path], lambda: load_ruleset(path, env={}))
 
 
 def _load_onchain():
-    st = os.stat(ONCHAIN_YML)
-    return _load_onchain_cached(st.st_mtime_ns, st.st_size)
+    path = ONCHAIN_YML
 
+    def build():
+        import yaml
 
-@functools.lru_cache(maxsize=4)
-def _load_onchain_cached(mtime_ns: int, size: int):
-    import yaml
+        with open(path) as f:
+            return load_onchain_rules(yaml.safe_load(f))
 
-    with open(ONCHAIN_YML) as f:
-        return load_onchain_rules(yaml.safe_load(f))
+    return memo("onchain_yml", [path], build)
 
 
 @query(

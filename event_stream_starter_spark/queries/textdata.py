@@ -10,7 +10,7 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import load_table, reuse
 from ..operators import arrow_batch as ab
 from ..operators import certs, textan
 from ..operators.dedup import (
@@ -999,14 +999,19 @@ def e2e_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plus (source, quality), never the text — the e2e_export_prep
     # corpus-NARROW precedent, guide §3.3). A/B (same-session best-of-3
     # each): sf0.1 3.32 -> 2.73s; sf1 a wash inside run noise
-    # ({5.94, 8.49} old vs {6.36, 6.54} new).
-    sh = ex.select(
-        "doc_id",
-        "lang",
-        "source",
-        "quality",
-        F.transform(token_shingles(t, 3), lambda s: F.xxhash64(s)).alias("sh"),
-    ).localCheckpoint(eager=True)
+    # ({5.94, 8.49} old vs {6.36, 6.54} new). io.reuse rather than a
+    # localCheckpoint: a checkpoint is a new RDD scan on every call, so
+    # the reused frames downstream of it (the jaccard base, the CC pair
+    # set) would be new plans each call, never hit and never freed.
+    sh = reuse(
+        ex.select(
+            "doc_id",
+            "lang",
+            "source",
+            "quality",
+            F.transform(token_shingles(t, 3), lambda s: F.xxhash64(s)).alias("sh"),
+        )
+    )
     pairs = jaccard_prefix_join(
         sh.select("doc_id", "lang", "source", "sh"),
         "doc_id",

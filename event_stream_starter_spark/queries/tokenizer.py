@@ -26,27 +26,25 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import load_table, memo, table_path
 from ..operators import bpe, certs, textan
 from . import query
 from .textdata import _TOKS_DUCK
 
 _N_MERGES = 24
 
-# One 24-round train per (process, sf_dir); every consumer below reuses
-# it. Greedy-prefix property: a k<=24 merge list is merges[:k], so the
-# cert query's 16-merge encoder needs no second training run. The data
-# under an sf_dir is immutable test data — the memo can't go stale.
-_MERGE_CACHE: dict[str, list[dict]] = {}
-
 
 def _trained_merges(spark: SparkSession, sf_dir: str) -> list[dict]:
-    got = _MERGE_CACHE.get(sf_dir)
-    if got is None:
+    """One 24-round train per version of the documents files; every
+    consumer below reuses it. Greedy-prefix property: a k<=24 merge list
+    is merges[:k], so the cert query's 16-merge encoder needs no second
+    training run."""
+
+    def build():
         docs = load_table(spark, sf_dir, "documents")
-        got = bpe.train_bpe(docs.select("text"), _N_MERGES, min_pair_count=2)
-        _MERGE_CACHE[sf_dir] = got
-    return got
+        return bpe.train_bpe(docs.select("text"), _N_MERGES, min_pair_count=2)
+
+    return memo(("bpe_merges", sf_dir), [table_path(sf_dir, "documents")], build)
 
 
 @query(
@@ -974,19 +972,14 @@ def _ug_pieces_col() -> Column:
     )
 
 
-# One train per (process, sf_dir) — the _trained_merges memo pattern.
-_UG_MODEL_CACHE: dict[str, list[tuple[str, Decimal]]] = {}
-
-
 def _trained_unigram(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[str, Decimal]]:
-    got = _UG_MODEL_CACHE.get(sf_dir)
-    if got is None:
+    def build():
         docs = load_table(spark, sf_dir, "documents")
-        got = ugm.train_unigram(docs, vocab_size=48, max_len=4, em_iters=2)
-        _UG_MODEL_CACHE[sf_dir] = got
-    return got
+        return ugm.train_unigram(docs, vocab_size=48, max_len=4, em_iters=2)
+
+    return memo(("unigram", sf_dir), [table_path(sf_dir, "documents")], build)
 
 
 @query(
@@ -1013,22 +1006,17 @@ def x_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# One pruned train per (process, sf_dir) — the _trained_merges memo pattern.
-_UG_PRUNED_CACHE: dict[str, list[tuple[str, Decimal]]] = {}
-
-
 def _trained_unigram_pruned(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[str, Decimal]]:
-    got = _UG_PRUNED_CACHE.get(sf_dir)
-    if got is None:
+    def build():
         docs = load_table(spark, sf_dir, "documents")
-        got = ugm.train_unigram_pruned(
+        return ugm.train_unigram_pruned(
             docs, vocab_size=48, max_len=4, seed_factor=4,
             em_iters_per_round=2,
         )
-        _UG_PRUNED_CACHE[sf_dir] = got
-    return got
+
+    return memo(("unigram_pruned", sf_dir), [table_path(sf_dir, "documents")], build)
 
 
 @query(

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import load_table, memo, table_path
 from ..operators import certs
 from ..operators.similarity import (
     brute_force_topk,
@@ -231,20 +231,18 @@ def dd_embed_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_CENTROIDS: dict[str, list[list[float]]] = {}
-
-
 def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     """The coarse quantizer is a MODEL artifact: fit once per corpus
     (deterministic k-means), reused across query batches — the IVF
     contract at scale (centroids live in a sidecar table; assignment is
-    a pure column expression of them). Cached per sf_dir."""
-    if sf_dir not in _IVF_CENTROIDS:
+    a pure column expression of them). Refit only when the embeddings
+    files change (io.memo)."""
+
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
-        _IVF_CENTROIDS[sf_dir] = kmeans_centroids(
-            emb, "embedding", n_clusters=16, iters=2, id_col="vec_id"
-        )
-    return _IVF_CENTROIDS[sf_dir]
+        return kmeans_centroids(emb, "embedding", n_clusters=16, iters=2, id_col="vec_id")
+
+    return memo(("ivf_centroids", sf_dir), [table_path(sf_dir, "embeddings")], build)
 
 
 @query(
@@ -337,27 +335,26 @@ def ann_ivf_recall_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FROZEN_CENTROIDS: dict[str, list[list[float]]] = {}
-
-
 def _frozen_half_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     """Stand-in for a streaming index's t0-frozen quantizer: k-means fit
     on the corpus PREFIX (vec_id < n/2 — the first half of the stream),
-    cached per sf_dir like _ivf_centroids. The registered drift cert
+    memoized like _ivf_centroids. The registered drift cert
     compares this against the full-corpus fit; the identical query shape
     pointed at a StreamingIvfIndex/StreamingSemDeDup sidecar centroid
     file is the production staleness monitor."""
-    if sf_dir not in _FROZEN_CENTROIDS:
+
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
         half = emb.count() // 2
-        _FROZEN_CENTROIDS[sf_dir] = kmeans_centroids(
+        return kmeans_centroids(
             emb.filter(F.col("vec_id") < half),
             "embedding",
             n_clusters=16,
             iters=2,
             id_col="vec_id",
         )
-    return _FROZEN_CENTROIDS[sf_dir]
+
+    return memo(("frozen_half_centroids", sf_dir), [table_path(sf_dir, "embeddings")], build)
 
 
 @query(
@@ -943,22 +940,21 @@ def dd_semdedup_para_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PQ_M, _PQ_K, _PQ_DIM = 16, 64, 64
 _PQ_SHORTLIST = 50
-_PQ_CODEBOOKS: dict[str, list[list[list[float]]]] = {}
 
 
 def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
     """PQ codebooks are a MODEL artifact like the IVF coarse quantizer:
-    M per-subspace L2 k-means fits, trained once per corpus and cached
-    (deterministic id-ordered seeds), assignment a pure column
-    expression of the broadcast literals."""
-    if sf_dir not in _PQ_CODEBOOKS:
+    M per-subspace L2 k-means fits, trained once per version of the
+    embeddings files (deterministic id-ordered seeds), assignment a pure
+    column expression of the broadcast literals."""
+
+    def build():
         from ..operators.similarity import pq_codebooks
 
         emb = load_table(spark, sf_dir, "embeddings")
-        _PQ_CODEBOOKS[sf_dir] = pq_codebooks(
-            emb, "embedding", "vec_id", dim=_PQ_DIM, m=_PQ_M, k=_PQ_K, iters=2
-        )
-    return _PQ_CODEBOOKS[sf_dir]
+        return pq_codebooks(emb, "embedding", "vec_id", dim=_PQ_DIM, m=_PQ_M, k=_PQ_K, iters=2)
+
+    return memo(("pq_codebooks", sf_dir), [table_path(sf_dir, "embeddings")], build)
 
 
 @query(
@@ -1213,15 +1209,13 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_OPQ_MODEL: dict[str, tuple[list[list[float]], list[list[list[float]]]]] = {}
-
-
 def _opq_model(spark: SparkSession, sf_dir: str):
     """OPQ model artifact: (rotation R, PQ codebooks trained on the
-    ROTATED corpus). Cached per corpus like _PQ_CODEBOOKS; both halves
+    ROTATED corpus). Memoized like _pq_codebooks; both halves
     are deterministic (sampled second moment + LAPACK eigh; id-ordered
     k-means seeds)."""
-    if sf_dir not in _OPQ_MODEL:
+
+    def build():
         from ..operators.similarity import opq_rotation, pq_codebooks, rotate_udf
 
         emb = load_table(spark, sf_dir, "embeddings")
@@ -1232,8 +1226,9 @@ def _opq_model(spark: SparkSession, sf_dir: str):
         cbs = pq_codebooks(
             remb, "remb", "vec_id", dim=_PQ_DIM, m=_PQ_M, k=_PQ_K, iters=2
         )
-        _OPQ_MODEL[sf_dir] = (rot, cbs)
-    return _OPQ_MODEL[sf_dir]
+        return rot, cbs
+
+    return memo(("opq_model", sf_dir), [table_path(sf_dir, "embeddings")], build)
 
 
 @query(

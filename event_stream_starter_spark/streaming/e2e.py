@@ -24,12 +24,10 @@ Scale notes:
   cardinality, the reference's ``events`` table) — at cluster scale the
   same merge laws drive MERGE INTO on a transactional format.
 - The facts table is the deduped event log partitioned by micro-batch.
-  Heat only ever reads the trailing 20 minutes, but nothing calls
-  ``SurvivorFactsTable.gc`` today: the table gains one ``batch=N/`` dir
-  per data micro-batch and grows with history, and ``read_cards`` lists
-  and scans every dir (same cards, a longer read as dirs pile up).
-  ``gc`` runs Spark jobs for every dir it checks, so the beat cycle
-  does not call it.
+  Heat only ever reads the trailing 20 minutes, but the table has no
+  retention: it gains one ``batch=N/`` dir per data micro-batch and
+  grows with history, and ``read_cards`` lists and scans every dir
+  (same cards, a longer read as dirs pile up).
 - Both sinks are idempotent per (key, batch_id) / per batch dir, so
   foreachBatch at-least-once redelivery leaves state unchanged (ST5) —
   asserted by tests/test_streaming.py.
@@ -39,7 +37,6 @@ from __future__ import annotations
 
 import os
 import re
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,9 +51,8 @@ UPSERT_KEYS = ["event_key", "event_type"]
 class SurvivorFactsTable:
     """Append-only (event_type, ts_us) fact log, one parquet dir per
     micro-batch (``batch=<id>/``). Replaying a batch overwrites its own
-    dir — idempotent under foreachBatch redelivery. ``gc`` drops dirs
-    behind the heat horizon when called; the pipeline does not call it.
-    Reads declare the fixed ``SCHEMA`` rather than infer it."""
+    dir — idempotent under foreachBatch redelivery. No dir is ever
+    dropped. Reads declare the fixed ``SCHEMA`` rather than infer it."""
 
     SCHEMA = "event_type string, ts_us bigint"
 
@@ -79,18 +75,6 @@ class SurvivorFactsTable:
         if not dirs:
             return None
         return self.spark.read.schema(self.SCHEMA).parquet(*dirs)
-
-    def gc(self, min_ts_us: int) -> None:
-        """Drop batch dirs whose max ts_us is entirely below the heat
-        horizon (called from the sink; a real deployment uses time-
-        partitioned retention on the table format)."""
-        for d in os.listdir(self.path):
-            if not re.fullmatch(r"batch=\d+", d):
-                continue
-            p = os.path.join(self.path, d)
-            mx = self.spark.read.parquet(p).agg(F.max("ts_us")).first()[0]
-            if mx is not None and mx < min_ts_us:
-                shutil.rmtree(p, ignore_errors=True)
 
 
 def integrated_sink(upsert: KeyedParquetTable, facts: SurvivorFactsTable):

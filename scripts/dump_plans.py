@@ -3,9 +3,11 @@ queries, with the plan features (pushed filters, broadcasts, exchanges)
 the scale design claims. Run after operator changes:
 `python scripts/dump_plans.py`."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from event_stream_starter_spark.plans import plan_features  # noqa: E402
 from event_stream_starter_spark.plans.inspect import _explain  # noqa: E402
@@ -362,7 +364,7 @@ def main() -> None:
             "```",
             "",
         ]
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(REPO_ROOT, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
     print("wrote PLANS.md")
 

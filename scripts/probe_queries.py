@@ -11,7 +11,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from event_stream_starter_spark.queries import all_queries  # noqa: E402
 from event_stream_starter_spark.session import get_spark  # noqa: E402

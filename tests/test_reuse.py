@@ -1,21 +1,25 @@
-"""io.reuse: the near-dup family's derived frames (shingle maps, the
-connected-components pair set) are filled once per version of their
+"""The version law of io.reuse and io.memo: the near-dup family's
+derived frames (shingle maps, the connected-components pair set) and
+the fitted models and rule configs are built once per version of their
 input files. A warm call over unchanged files runs no job to rebuild
 them; a rewritten input file rebuilds them, so an answer never comes
-from stale shingles."""
+from stale inputs."""
 
 from __future__ import annotations
 
 import glob
 import itertools
 import os
+import shutil
 
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import DataFrame
 
 from event_stream_starter_spark import io as eio
-from event_stream_starter_spark.queries import all_queries
+from event_stream_starter_spark.queries import all_queries, rules_q, vectors
 
 from tests.oracle_utils import compare
 
@@ -176,3 +180,98 @@ def test_concurrent_callers_share_one_fill(spark):
     assert len(results) == 12
     assert len({id(r) for r in results}) == 1
     assert sorted(results[0].collect()) == [(0, 14), (1, 13), (2, 13)]
+
+
+def test_corpus_prep_calls_leave_cache_entries_flat(spark, sf_dir, tmp_path, monkeypatch):
+    """e2e_corpus_prep's shingle frame, jaccard base and pair set are
+    keyed by the documents files: three calls in one session leave Spark's
+    cache manager holding as many entries as one call did, and the answer
+    still equals the oracle."""
+    docs = _managed_documents(spark, sf_dir, tmp_path, monkeypatch)
+    q = "e2e_corpus_prep"
+    fn = all_queries()[q].fn
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    counts = []
+    for _ in range(3):
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        counts.append(cache.cachedData().size())
+    assert counts[0] > 0 and counts[2] == counts[0], counts
+    assert _oracle_problems(spark, sf_dir, docs, q) == []
+
+
+def _keep_every_third_doc(path: str) -> None:
+    t = pq.read_table(path)
+    keep = [i for i, d in enumerate(t.column("doc_id").to_pylist()) if d % 3 == 0]
+    pq.write_table(t.take(keep), path)
+
+
+def _negate_embeddings(path: str) -> None:
+    t = pq.read_table(path)
+    i = t.schema.get_field_index("embedding")
+    field = t.schema.field(i)
+    neg = [None if v is None else [-x for x in v] for v in t.column(i).to_pylist()]
+    pq.write_table(t.set_column(i, field, pa.array(neg, type=field.type)), path)
+
+
+def _raise_first_rule_score(path: str) -> None:
+    text = open(path).read()
+    assert "score: 8\n" in text
+    with open(path, "w") as fh:
+        fh.write(text.replace("score: 8\n", "score: 9\n", 1))
+
+
+def _query(name: str):
+    return lambda spark, sf: all_queries()[name].fn(spark, sf)
+
+
+# id -> (input, in-place rewrite of it, the memoized call)
+MEMO_CASES = {
+    "x_bpe_train": ("documents", _keep_every_third_doc, _query("x_bpe_train")),
+    "x_unigram_train": ("documents", _keep_every_third_doc, _query("x_unigram_train")),
+    "x_lr_quality_train": ("documents", _keep_every_third_doc, _query("x_lr_quality_train")),
+    "_ivf_centroids": ("embeddings", _negate_embeddings, vectors._ivf_centroids),
+    "_pq_codebooks": ("embeddings", _negate_embeddings, vectors._pq_codebooks),
+    "rules_yml": ("rules", _raise_first_rule_score, lambda spark, sf: rules_q._load_rules()),
+}
+
+
+def _stage(kind: str, src_dir: str, dst, monkeypatch) -> str:
+    """Copies the ``kind`` input file from ``src_dir`` into the new dir
+    ``dst`` and returns the copy's path; a rules copy becomes RULES_YML."""
+    dst.mkdir()
+    name = "rules.yml" if kind == "rules" else f"{kind}.parquet"
+    path = str(dst / name)
+    shutil.copyfile(os.path.join(src_dir, name), path)
+    if kind == "rules":
+        monkeypatch.setattr(rules_q, "RULES_YML", path)
+    return path
+
+
+@pytest.mark.parametrize("case", list(MEMO_CASES))
+def test_memo_follows_a_rewritten_input(spark, sf_dir, tmp_path, monkeypatch, case):
+    """A fitted model (or compiled rule set) over a copy of its input:
+    a repeat call on unchanged files starts no Spark job; after the file
+    is rewritten in place (same inode), the next call's answer equals a
+    fresh, never-memoized build over a copy of the new file, and differs
+    from the old answer."""
+    kind, rewrite, call = MEMO_CASES[case]
+
+    def answer(sf):
+        got = call(spark, sf)
+        return sorted(map(tuple, got.collect())) if isinstance(got, DataFrame) else got
+
+    src = os.path.dirname(rules_q.RULES_YML) if kind == "rules" else sf_dir
+    path = _stage(kind, src, tmp_path / "a", monkeypatch)
+    sf = os.path.dirname(path)
+    before = answer(sf)
+    assert _run_in_group(spark, f"memo-warm-{case}", lambda: call(spark, sf)) == []
+
+    ino = os.stat(path).st_ino
+    rewrite(path)
+    assert os.stat(path).st_ino == ino
+    after = answer(sf)
+
+    fresh = os.path.dirname(_stage(kind, sf, tmp_path / "b", monkeypatch))
+    assert after == answer(fresh)
+    assert after != before
